@@ -1,38 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // scan parallelism (guide §6): the per-file open-cost adder floors
-      // split sizes at 4 MB by default, so a modest file gets ~3 splits no
-      // matter how many cores the driver gave us — splits then stop
-      // adapting to the core count the driver varies. On local NVMe the
-      // true open cost is far below 4 MB; with it lowered, split size
-      // falls back to totalBytes/defaultParallelism (i.e. it SCALES with
-      // the core count) while maxPartitionBytes still caps huge scans.
-      // Parameterised: object-store deployments (real per-open latency)
-      // should keep the 4 MB default — see OPTIMIZATION_r21.md.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (256 * 1024).toString))
-      // joins (guide §3.1/§9): allow the planner to pick shuffled-hash
-      // over sort-merge when its size conditions hold — every pruned
-      // upsert/CDF/merge is a full-outer join on the PK whose sides are
-      // delta-or-bucket sized, where SHJ skips both sort passes. Scale
-      // note: this is the guide's recommended baseline, not a local-mode
-      // trick; SMJ remains the fallback whenever the build side may not
-      // fit its partition's memory.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // VERDICT r20 "What's wrong #2": structured-streaming stop() cancels
     // its job group after the group has drained, and DAGScheduler WARNs
     // "Failed to cancel job group … Cannot find active jobs for it" into
@@ -100,14 +71,14 @@ object Bench {
     // from an unfiltered run, so a filtered run skips the overwrite below
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def timeMin3(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+    def timeMin3(q: queries.Q): Double =
       (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         // toRdd.count() forces EVERY output column to be computed; a bare
         // count() would let Catalyst prune pure projections (map-only
         // queries like fingerprints would be timed as a parquet row count)
-        try fn(spark, sfDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => failed += name } // visible below, never silent
+        try q.fn(spark, sfDir).queryExecution.toRdd.count()
+        catch { case _: Throwable => failed += q.name } // visible below, never silent
         (System.nanoTime() - t0) / 1e9
       }.min
     // previous round's committed artifact = the baseline, loaded BEFORE
@@ -133,9 +104,9 @@ object Bench {
           case _ => Map.empty
         }
       } catch { case _: Throwable => Map.empty }
-    val bench = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    val firstPass = bench.map { case (name, fn) => name -> timeMin3(name, fn) }
+    val bench = queries.Registry.all.sortBy(_.name)
+      .filter(q => only.forall(_.contains(q.name)))
+    val firstPass = bench.map(q => q.name -> timeMin3(q))
     // noise rejection (VERDICT r11 "What's wrong #3"): min-of-3 does not
     // defend against a co-tenant contention burst spanning all three reps
     // (observed thrice in four rounds: q9 26.5 s recorded vs 2.0 s
@@ -146,10 +117,9 @@ object Bench {
     // regression carries its own re-measurement — a bounded second pass,
     // ~a handful of rows on a contended run, zero on a clean one —
     // keeping the min. Rows that STAY slow are real and surface below.
-    val retried = firstPass.collect {
-      case (name, t) if prevQueries.get(name).exists(p => t >= p * 1.5 && t - p > 0.3) =>
-        val fn = SparkEntry.queries(name)
-        (name, t, timeMin3(name, fn))
+    val retried = bench.zip(firstPass).collect {
+      case (q, (_, t)) if prevQueries.get(q.name).exists(p => t >= p * 1.5 && t - p > 0.3) =>
+        (q.name, t, timeMin3(q))
     }
     val retriedMin = retried.map { case (n, _, after) => n -> after }.toMap
     val results = firstPass.map { case (n, t) =>
@@ -190,45 +160,10 @@ object Bench {
     def regsJson(regs: Seq[(String, Double, Double)]): String = regs
       .map { case (q, p, n) => s"""{"q":"$q","prev":${r3(p)},"now":${r3(n)}}""" }
       .mkString("[", ",", "]")
-    // harness/non-harness split (VERDICT r10 item 1c): the replay/
-    // maintenance harness rows — structured-streaming micro-batch replay
-    // fixtures and the two-table IVM fixture — time fixture CONSTRUCTION
-    // by design (multi-version loads, commit-log tails); their cost is
-    // the harness, not the operator under test. Splitting them out in the
-    // artifact makes the contract metric (core mean sec/query) auditable
-    // without re-deriving the decomposition each round. The ANN
-    // model-training fixtures joined the split in r12 (VERDICT r11
-    // item 4): each rep retrains k-means + PQ codebooks (and sim7
-    // additionally bootstraps the persisted index) — they time index
-    // CONSTRUCTION, the one cost a real deployment amortizes across
-    // every search.
-    def isHarness(n: String): Boolean =
-      n.startsWith("stream") || n == "m11_join_view_maintenance" ||
-        n == "sim6_ivfpq_topk" || n == "sim7_persisted_ann_index" ||
-        n == "d13_persisted_dedup_index" || // bootstraps + appends the whole index per rep
-        n == "d14_dedup_index_takedown" || // bootstraps the whole index per rep (the takedown itself is O(touched))
-        // same class as m11: multi-load fixture + per-commit maintenance +
-        // compaction replays per rep; the operator under test (the
-        // transparent rewrite + one delta apply) is a sliver of the row
-        n == "mv2_maintained_rewrite" || n == "mv3_join_agg_navigation" ||
-        n == "mv5_star_navigation" || // three-table loads + star maintenance + 3 compactions per rep
-        n == "mv7_filtered_view" || // two churned loads + 3 maintenance calls + a compaction per rep
-        // round 18: the same churned-loads + maintenance + compaction
-        // class — each row's operator under test (one navigated read /
-        // one delta roll) is a sliver of its fixture replays
-        n == "mv6_kmv_navigation" || n == "mv7b_implied_range_navigation" ||
-        n == "mv7s_filtered_star_view" || n == "mv8_unknown_member_star" ||
-        n == "mv9_exact_distinct_measure" ||
-        // round 19: same class — two star views maintained through three
-        // churned sides / a distribution view through three loads; the
-        // navigated reads are sub-second slivers of the fixture replay
-        n == "mv10_star_distinct_navigation" || n == "mv11_percentile_navigation" ||
-        // round 20: same churned-loads + maintenance + compaction class
-        n == "mv12_variance_navigation" || n == "mv13_topk_navigation" ||
-        n == "mv14_moments_navigation" || n == "mv15_corr_navigation" ||
-        n == "mv16_regr_navigation" || n == "mv17_histogram_navigation" ||
-        n == "mv18_star_stats_navigation"
-    val (harnessRows, coreRows) = results.partition { case (n, _) => isHarness(n) }
+    // harness/non-harness split (VERDICT r10 item 1c): the registry marks
+    // the rows that time fixture construction (see queries.Q)
+    val harness = bench.filter(_.harness).map(_.name).toSet
+    val (harnessRows, coreRows) = results.partition { case (n, _) => harness(n) }
     def mean(rows: Seq[(String, Double)]): Double =
       if (rows.isEmpty) 0.0 else rows.map(_._2).sum / rows.size
     val split =

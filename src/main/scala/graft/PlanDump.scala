@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-evidence dumper: writes `.explain("formatted")` output for the named
   * queries to plans/<dir>/<query>_<tag>.txt (guide §1: capture the plan
@@ -11,26 +10,12 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
     val outDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r21"))
     val names = sys.env.getOrElse("SPARK_GRAFT_PLANS", "q9_profit_by_nation")
       .split(",").map(_.trim).filter(_.nonEmpty)
-    // mirror Bench's session configuration exactly — the dumped plans must
-    // be the plans the bench measures (same env knobs, same defaults)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", (256 * 1024).toString))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

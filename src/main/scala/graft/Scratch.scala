@@ -1,46 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only single-query timing harness: `runMain graft.Scratch q1 q2 ...`
-  * runs each named query twice at SPARK_GRAFT_SF_DIR (default sf0.1) and
-  * prints per-rep wall times — for isolating one query's cost outside the
-  * full Bench sweep. */
+/** Dev-only plan-evidence fixtures cited by PLANS.md: each mode builds a
+  * minimal fixture at SPARK_GRAFT_SF_DIR (default sf0.1) and prints its
+  * plans. A registry query's plan is `graft.PlanDump`; its timing is
+  * `SPARK_GRAFT_ONLY=<names> graft.Bench`.
+  *
+  *   sbt "runMain graft.Scratch plan-widen|plan-mv1011|plan-mv1213"
+  */
 object Scratch {
   def main(args: Array[String]): Unit = {
+    val mode = args.headOption
+      .filter(Set("plan-widen", "plan-mv1011", "plan-mv1213"))
+      .getOrElse(sys.error(
+        "usage: runMain graft.Scratch plan-widen|plan-mv1011|plan-mv1213"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
-    val byName = queries.Registry.all.map(q => q.name -> q.fn).toMap
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("d2_ngram_jaccard_pairs", "d5_neardup_survivors", "d7_neardup_components")
-
-    if (args.headOption.contains("plan")) {
-      val name = args.lift(1).getOrElse(
-        sys.error("usage: runMain graft.Scratch plan <query-name>"))
-      val q = queries.Registry.all.find(_.name == name).getOrElse(
-        sys.error(s"unknown query '$name'; names: " +
-          queries.Registry.all.map(_.name).sorted.mkString(", ")))
-      val df = q.fn(spark, sfDir)
-      df.collect()
-      // Full AQE-final formatted plan (PLANS.md source); NULs from the
-      // unknown-member sentinel print escaped so the dump stays text.
-      println("[plan-full-begin]")
-      println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        .replace("\u0000", "\\u0000"))
-      println("[plan-full-end]")
-      spark.stop(); sys.exit(0)
-    }
-
-    if (args.headOption.contains("plan-widen")) {
+    if (mode == "plan-widen") {
       // PLANS.md source for the type-widening read: the m12 fixture's
       // composed scan BEFORE the gate row's localCheckpoint truncates it.
       import org.apache.spark.sql.functions._
@@ -66,9 +42,8 @@ object Scratch {
         org.apache.spark.sql.execution.FormattedMode))
       println("[plan-full-end]")
       ops.Storage.deleteRecursively(dir)
-      spark.stop(); sys.exit(0)
     }
-    if (args.headOption.contains("plan-mv1011")) {
+    if (mode == "plan-mv1011") {
       // PLANS.md source for the round-19 navigated shapes, BEFORE the gate
       // rows' localCheckpoint truncates the logical plan: a minimal
       // (no-churn) fixture of the mv10 star distinct/sketch views and the
@@ -162,9 +137,8 @@ object Scratch {
       println("[explain-end]")
       MatView.clear()
       Storage.deleteRecursively(dir)
-      spark.stop(); sys.exit(0)
     }
-    if (args.headOption.contains("plan-mv1213")) {
+    if (mode == "plan-mv1213") {
       // PLANS.md source for the round-20 navigated shapes: the variance/
       // stddev family over Σx² partials (mv12) and the heavy-hitters
       // top-k composition (mv13), before the gate rows' localCheckpoint
@@ -254,18 +228,6 @@ object Scratch {
       println("[explain-end]")
       MatView.clear()
       Storage.deleteRecursively(dir)
-      spark.stop(); sys.exit(0)
-    }
-    spark.read.parquet(s"$sfDir/documents.parquet").count() // warmup
-
-    for (n <- names; rep <- 1 to 2) {
-      val t0 = System.nanoTime()
-      // toRdd forces every output column to be computed (count() alone
-      // would let Catalyst prune pure projections to a row count)
-      val fn = byName.getOrElse(n, sys.error(s"unknown query '$n'"))
-      val c = fn(spark, sfDir).queryExecution.toRdd.count()
-      println(f"[scratch] $n rep$rep rows=$c t=${(System.nanoTime() - t0) / 1e9}%.2f s")
-      spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()
   }

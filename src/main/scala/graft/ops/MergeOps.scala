@@ -68,16 +68,6 @@ object MergeOps {
     val incomingOne =
       if (tieBreak.nonEmpty) latestByKey(incoming, pk, tieBreak)
       else incoming.dropDuplicates(pk)
-    // PROVABLY-EMPTY old (every bootstrap load passes a `.limit(0)`-typed
-    // frame): the full-outer join degenerates to "insert everything" —
-    // every row is oldAbsent, so the output is exactly the deduped
-    // increment with both audit columns at runTs. Skip the join and its
-    // two exchanges outright (guide §2.4); at any scale a first load is
-    // then one dedup pass, not a join against a planned-but-empty side.
-    if (Storage.provablyEmpty(old.queryExecution.analyzed))
-      return incomingOne.select(
-        (pk ++ tracked).map(col) ++
-          Seq(runTs.as(loadedAtCol), runTs.as(lastUpdCol)): _*)
     // presence markers, NOT key-nullness: the join is null-safe (<=>), so
     // a NULL PK is a legitimate matchable key — reading `o.pk IS NULL` as
     // "absent from old" would re-insert the NULL-key row every run,

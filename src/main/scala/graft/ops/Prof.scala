@@ -1,25 +1,21 @@
 package graft.ops
 
-/** Dev-loop phase timer (guide §1 "measure first"): wall-time accumulation
-  * per engine phase, enabled only under `-Dgraft.prof=1` (the [[graft.Profile]]
-  * harness sets it). Disabled it is a single static-field branch — zero
-  * allocation, zero overhead on every production path.
+/** Phase timer (guide §1 "measure first"): wall-time accumulation per
+  * engine phase, always on. Every call site is phase-level, so the cost is
+  * one `nanoTime` pair plus one map update per phase.
   */
 object Prof {
-  val enabled: Boolean = sys.props.get("graft.prof").contains("1")
   private val acc = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
 
-  @inline def time[A](tag: String)(f: => A): A =
-    if (!enabled) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally {
-        val d = System.nanoTime() - t0
-        acc.compute(tag, (_, v) =>
-          if (v == null) Array(d, 1L) else { v(0) += d; v(1) += 1; v })
-      }
+  @inline def time[A](tag: String)(f: => A): A = {
+    val t0 = System.nanoTime()
+    try f
+    finally {
+      val d = System.nanoTime() - t0
+      acc.compute(tag, (_, v) =>
+        if (v == null) Array(d, 1L) else { v(0) += d; v(1) += 1; v })
     }
+  }
 
   def reset(): Unit = acc.clear()
 

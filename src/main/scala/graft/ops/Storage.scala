@@ -1715,14 +1715,24 @@ object Storage {
     * back-fills cores the other's stragglers leave idle. Only for work
     * on DISJOINT state (separate tables / separate frames) — the commit
     * protocol serializes per table, not across threads on one table.
-    * Failure in either propagates to the caller. */
+    * Both sides always run to completion before this returns or throws, so
+    * a failure never leaves the sibling still committing behind the
+    * caller's back. A failure propagates to the caller; when both sides
+    * fail, `a`'s failure is thrown with `b`'s attached as suppressed. */
   private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
+    import scala.util.{Failure, Try}
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    // blocking: each side holds its pool thread for whole Spark jobs
+    val fa = Future(blocking(a))
+    val fb = Future(blocking(b))
+    val ra = Try(Await.result(fa, Duration.Inf))
+    val rb = Try(Await.result(fb, Duration.Inf))
+    (ra, rb) match {
+      case (Failure(ea), Failure(eb)) => ea.addSuppressed(eb); throw ea
+      case _ => (ra.get, rb.get) // rethrows the one failure, if any
+    }
   }
 
   /** Syntactic emptiness proof over an analyzed plan: `.limit(0)` (and

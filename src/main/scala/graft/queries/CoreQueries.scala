@@ -1398,7 +1398,8 @@ object CoreQueries {
              |             ELSE CAST(FLOOR(CAST(value AS DECIMAL(38,6))) AS DOUBLE) END AS dval,
              |        row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
              |      FROM events) t
-             |WHERE rn = 1 GROUP BY event_type""".stripMargin)),
+             |WHERE rn = 1 GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // Aggregate NAVIGATION end-to-end: m11's fact⋈dim rollup served by a
     // MAINTAINED join view instead of the join. Same churn script as
@@ -1527,7 +1528,8 @@ object CoreQueries {
              |       CAST(max(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS max_rev
              |FROM orders JOIN customer ON o_custkey = c_custkey
              |WHERE o_orderkey % 3 = 0 AND o_orderkey % 13 <> 0
-             |GROUP BY c_nationkey""".stripMargin)),
+             |GROUP BY c_nationkey""".stripMargin),
+      harness = true),
 
     // N-ary STAR navigation: the reference's richest fact resolves THREE
     // dimensions in one load (dwh_fact_charer_location.py:103-115, FKs at
@@ -1659,7 +1661,8 @@ object CoreQueries {
              |FROM orders JOIN customer ON o_custkey = c_custkey
              |            JOIN nation ON c_nationkey = n_nationkey
              |WHERE o_orderkey % 3 = 0 AND o_orderkey % 13 <> 0
-             |GROUP BY n_name""".stripMargin)),
+             |GROUP BY n_name""".stripMargin),
+      harness = true),
 
     // KMV sketch NAVIGATION under CHURN, over STRING keys: the
     // distinct-count estimate served from a maintained sketch PARTIAL
@@ -1760,7 +1763,8 @@ object CoreQueries {
              |  FROM r WHERE rn = (CASE WHEN n < 64 THEN n ELSE 64 END)),
              |c AS (SELECT c_mktsegment, COUNT(*) AS cnt FROM live GROUP BY 1)
              |SELECT c_mktsegment, cnt, est_distinct_names
-             |FROM c JOIN est USING (c_mktsegment)""".stripMargin)),
+             |FROM c JOIN est USING (c_mktsegment)""".stripMargin),
+      harness = true),
 
     // FILTERED (partial) materialized view, maintained end-to-end: the
     // view aggregates ONLY rows passing its predicate (value > 50 — a
@@ -1852,7 +1856,8 @@ object CoreQueries {
              |  CAST(min(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS min_value,
              |  CAST(max(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS max_value
              |FROM events WHERE CAST(value AS DECIMAL(38,6)) > 50
-             |GROUP BY event_type""".stripMargin)),
+             |GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // PREDICATE-IMPLICATION navigation over a filtered view: the view
     // slices on a KEY column (order date >= 1997-01-01 — the classic
@@ -1955,7 +1960,8 @@ object CoreQueries {
              |  CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_rev,
              |  CAST(max(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS max_rev
              |FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1998-01-01'
-             |GROUP BY o_orderpriority""".stripMargin)),
+             |GROUP BY o_orderpriority""".stripMargin),
+      harness = true),
 
     // EXACT COUNT(DISTINCT measure) navigation — no sketch, no conf gate:
     // maintain an auxiliary (group, measure) DISTINCT view (just a
@@ -2041,7 +2047,8 @@ object CoreQueries {
              |SELECT event_type, count(*) AS cnt,
              |  count(DISTINCT value) AS n_values,
              |  CAST(sum(DISTINCT value) AS DOUBLE) AS sum_distinct_value
-             |FROM e GROUP BY event_type""".stripMargin)),
+             |FROM e GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // FILTERED STAR view — the most common partial datamart: a hot slice
     // (o_totalprice > 1000) of a fact⋈dim rollup, maintained end-to-end.
@@ -2156,7 +2163,8 @@ object CoreQueries {
              |  CAST(min(p) AS DOUBLE) AS min_rev
              |FROM o JOIN customer ON o_custkey = c_custkey
              |WHERE p > 1000
-             |GROUP BY c_mktsegment""".stripMargin)),
+             |GROUP BY c_mktsegment""".stripMargin),
+      harness = true),
 
     // UNKNOWN-MEMBER STAR navigation — the reference's own richest join
     // shape (dwh_fact_charer_location.py:107-112: facts with NULL URLs
@@ -2286,7 +2294,8 @@ object CoreQueries {
              |  CAST(sum(p) AS DOUBLE) AS sum_rev,
              |  CAST(min(p) AS DOUBLE) AS min_rev
              |FROM f JOIN d ON f.url = d.url OR (f.url IS NULL AND d.dim_id = -1)
-             |GROUP BY c_mktsegment""".stripMargin)),
+             |GROUP BY c_mktsegment""".stripMargin),
+      harness = true),
 
     // DISTINCT-COUNT navigation over a STAR — "distinct customers per
     // nation" over fact⋈dim⋈dim, the standard dashboard distinct panel,
@@ -2434,7 +2443,8 @@ object CoreQueries {
              |         ELSE 63.0 / (CAST(hv AS DOUBLE) / 2147483647.0) END AS est_cust
              |  FROM r WHERE rn = (CASE WHEN n < 64 THEN n ELSE 64 END))
              |SELECT n_name, cnt, n_cust, est_cust
-             |FROM c JOIN est USING (n_name)""".stripMargin)),
+             |FROM c JOIN est USING (n_name)""".stripMargin),
+      harness = true),
 
     // EXACT median/percentile navigation: the auxiliary DISTRIBUTION view
     // keyed (event_type, value) — mv9's machinery, whose count_rows IS the
@@ -2519,7 +2529,8 @@ object CoreQueries {
              |SELECT event_type, count(*) AS cnt, median(value) AS med,
              |       quantile_cont(value, 0.25) AS p25,
              |       quantile_cont(value, 0.75) AS p75
-             |FROM e GROUP BY event_type""".stripMargin)),
+             |FROM e GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // VARIANCE/STDDEV NAVIGATION — the last standard dashboard aggregate
     // re-expressed over maintained partials: a Σx² partial (signed, purely
@@ -2630,7 +2641,8 @@ object CoreQueries {
              |       round(stddev_pop(dval), 6) AS sp_d,
              |       round(var_samp(value), 6) AS vs_v,
              |       round(stddev_pop(value), 6) AS sp_v
-             |FROM e GROUP BY event_type""".stripMargin)),
+             |FROM e GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // HEAVY-HITTERS TOP-K NAVIGATION — the dashboard's "top items per
     // group" panel served by COMPOSITION: the inner (group, item) count
@@ -2717,7 +2729,8 @@ object CoreQueries {
              |        row_number() OVER (PARTITION BY event_type
              |          ORDER BY cnt DESC, item) AS rn
              |      FROM c)
-             |SELECT event_type, item, cnt, rn FROM r WHERE rn <= 3""".stripMargin)),
+             |SELECT event_type, item, cnt, rn FROM r WHERE rn <= 3""".stripMargin),
+      harness = true),
 
     // SKEWNESS/KURTOSIS NAVIGATION — the central-moment family COMPLETED:
     // Σx³ and Σx⁴ power-sum partials (signed, purely additive under
@@ -2826,7 +2839,8 @@ object CoreQueries {
              |             - 3*(s1/n)*(s1/n)*(s1/n)*s1)
              |        / ((s2 - (s1*s1)/n) * (s2 - (s1*s1)/n)) - 3, 6) AS kurt_d,
              |  round(sqrt((s2 - (s1*s1)/n) / (n - 1)), 6) AS sd_d
-             |FROM s""".stripMargin)),
+             |FROM s""".stripMargin),
+      harness = true),
 
     // CORR/COVAR NAVIGATION — the cross-moment family: a registered PAIR
     // maintains six pairwise-complete partials (n, Σx, Σy, Σx², Σy², Σxy
@@ -2928,7 +2942,8 @@ object CoreQueries {
              |       round(corr(xv, yv), 6) AS r_xy,
              |       round(covar_pop(xv, yv), 6) AS cp_xy,
              |       round(covar_samp(xv, yv), 6) AS cs_xy
-             |FROM e GROUP BY event_type""".stripMargin)),
+             |FROM e GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // REGR_* NAVIGATION — the full SQL-standard linear-regression family
     // served from the SAME six pair partials as mv15 (zero new state):
@@ -3030,7 +3045,8 @@ object CoreQueries {
              |       round(regr_avgx(yv, xv), 6) AS ax,
              |       round(regr_avgy(yv, xv), 6) AS ay,
              |       round(regr_sxy(yv, xv), 4) AS sxy
-             |FROM e GROUP BY event_type""".stripMargin)),
+             |FROM e GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // HISTOGRAM NAVIGATION — the chart-ready binned distribution served
     // from the (group, value) DISTRIBUTION view by EXPRESSION GROUPING:
@@ -3108,7 +3124,8 @@ object CoreQueries {
              |SELECT event_type,
              |       CAST(FLOOR(value / 50.0) AS BIGINT) AS bin,
              |       count(*) AS cnt
-             |FROM e GROUP BY 1, 2""".stripMargin)),
+             |FROM e GROUP BY 1, 2""".stripMargin),
+      harness = true),
 
     // STAR STATISTICAL PANEL — the new moment/cross-moment partials
     // pinned at the oracle gate THROUGH the star delta path: a two-side
@@ -3234,7 +3251,8 @@ object CoreQueries {
              |       round(var_pop(o_price), 4) AS vp_p,
              |       round(corr(o_price, c_bal), 6) AS r_pb,
              |       round(covar_samp(o_price, c_bal), 4) AS cs_pb
-             |FROM j GROUP BY c_mktsegment""".stripMargin)),
+             |FROM j GROUP BY c_mktsegment""".stripMargin),
+      harness = true),
 
     // ATOMIC workspace+view publish: a transaction's base tables AND its
     // maintained views land in ONE manifest (MatViews.workspaceCommitWith
@@ -3706,7 +3724,8 @@ object CoreQueries {
              |       CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_rev
              |FROM orders JOIN customer ON o_custkey = c_custkey
              |WHERE o_orderkey % 13 <> 0
-             |GROUP BY c_nationkey""".stripMargin)),
+             |GROUP BY c_nationkey""".stripMargin),
+      harness = true),
 
     // m11's CONTINUOUS form: the same two-table view maintained by a real
     // Structured Streaming query consuming the MERGED commit-log tail of
@@ -3754,5 +3773,6 @@ object CoreQueries {
              |       CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_rev
              |FROM orders JOIN customer ON o_custkey = c_custkey
              |WHERE o_orderkey % 13 <> 0
-             |GROUP BY c_nationkey""".stripMargin)))
+             |GROUP BY c_nationkey""".stripMargin),
+      harness = true))
 }

@@ -235,7 +235,8 @@ object CorpusQueries {
              |  AND n.doc_id >= 250 AND o.doc_id < 250),
              |dups AS (SELECT doc_id FROM near UNION SELECT doc_id FROM exact)
              |SELECT doc_id FROM documents
-             |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id FROM dups)""".stripMargin)),
+             |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id FROM dups)""".stripMargin),
+      harness = true),
 
     // TAKEDOWN-aware dedup index — the right-to-be-forgotten flow a
     // governed training corpus needs: removed documents leave the
@@ -278,7 +279,8 @@ object CorpusQueries {
              |  AND n.doc_id >= 250 AND o.doc_id IN (SELECT doc_id FROM kept)),
              |dups AS (SELECT doc_id FROM near UNION SELECT doc_id FROM exact)
              |SELECT doc_id FROM documents
-             |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id FROM dups)""".stripMargin)),
+             |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id FROM dups)""".stripMargin),
+      harness = true),
 
     // The dedup index maintained CONTINUOUSLY from the corpus table's
     // commit-log tail (foreachBatchDedupIndexMaintain — previously
@@ -345,7 +347,8 @@ object CorpusQueries {
              |  AND n.doc_id >= 250 AND o.doc_id IN (SELECT doc_id FROM kept)),
              |dups AS (SELECT doc_id FROM near UNION SELECT doc_id FROM exact)
              |SELECT doc_id FROM documents
-             |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id FROM dups)""".stripMargin)),
+             |WHERE doc_id >= 250 AND doc_id NOT IN (SELECT doc_id FROM dups)""".stripMargin),
+      harness = true),
 
     Q("d9_chunk_dedup",
       (s, d) => Corpus.chunkDedup(Tables.documents(s, d), chunkWords = 10),

@@ -120,7 +120,8 @@ object StreamingQueries {
       Some(s"""SELECT ${Registry.epochSql("date_trunc('hour', ts)")} AS hour_epoch, event_type,
              |  COUNT(*) AS n_events,
              |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-             |FROM events GROUP BY 1, 2""".stripMargin)),
+             |FROM events GROUP BY 1, 2""".stripMargin),
+      harness = true),
 
     // Custom-state sessionization (flatMapGroupsWithState) replayed over
     // the full event log in 4 event-time-ordered micro-batches, open
@@ -156,7 +157,8 @@ object StreamingQueries {
             col("session_start_epoch"))
           .localCheckpoint()
       },
-      Some(Registry.SessionizeOracleSql)),
+      Some(Registry.SessionizeOracleSql),
+      harness = true),
 
     // Stream-stream interval join: click ⋈ purchase per user within
     // [click_ts, click_ts + 1h], both sides watermarked (2h) so buffered
@@ -214,7 +216,8 @@ object StreamingQueries {
              |SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id
              |FROM e c JOIN e p ON c.user_id = p.user_id
              |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-             |  AND p.us >= c.us AND p.us <= c.us + 3600000000""".stripMargin)),
+             |  AND p.us >= c.us AND p.us <= c.us + 3600000000""".stripMargin),
+      harness = true),
 
     Q("stream1_scd2_equiv",
       (s, d) => withShufflePartitions(s, 4) {
@@ -298,7 +301,8 @@ object StreamingQueries {
              |       CAST(epoch(valid_from) AS BIGINT) AS vf_epoch,
              |       COALESCE(CAST(epoch(vt_next) AS BIGINT), ${Registry.InfinityEpoch}) AS vt_epoch,
              |       (vt_next IS NULL) AS is_current
-             |FROM v""".stripMargin)),
+             |FROM v""".stripMargin),
+      harness = true),
 
     // Streaming M1 through the PARTITION-PRUNED write path — the round-7
     // storage shape under a real Structured Streaming query: each arrival
@@ -380,7 +384,8 @@ object StreamingQueries {
            |       ${cutoffEpochCase("a.loaded_b")} AS loaded_epoch,
            |       ${cutoffEpochCase("a.upd_b")} AS upd_epoch
            |FROM agg a JOIN snap s ON s.user_id = a.user_id AND s.b = a.last_b""".stripMargin
-      }),
+      },
+      harness = true),
 
     // CDF-driven incremental VIEW MAINTENANCE under a real streaming
     // query: the base table takes five pruned-upsert loads; the stream is
@@ -440,7 +445,8 @@ object StreamingQueries {
              |FROM (SELECT event_type, value,
              |        row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) rn
              |      FROM events) t
-             |WHERE rn = 1 GROUP BY event_type""".stripMargin)),
+             |WHERE rn = 1 GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // Streaming exact dedup — d1's streaming twin driver-checked: the
     // corpus replays in doc_id order (synthetic event time = doc_id
@@ -480,7 +486,8 @@ object StreamingQueries {
         } finally q.stop()
         s.table(sink).select(col("doc_id")).localCheckpoint()
       },
-      Some("SELECT min(doc_id) AS doc_id FROM documents GROUP BY text")),
+      Some("SELECT min(doc_id) AS doc_id FROM documents GROUP BY text"),
+      harness = true),
 
     // Continuous maintenance of the PERSISTED ANN index (VERDICT r10
     // item 7 — sim7's maintainer wired into the stream6/stream8
@@ -579,7 +586,8 @@ object StreamingQueries {
              |qn AS (SELECT CAST(CAST(SUM(u * u) AS VARCHAR) AS DOUBLE) AS qn2 FROM qx)
              |SELECT vec_id, dot / (sqrt(n2) * sqrt(qn2)) AS cos_sim, TRUE AS index_agrees
              |FROM dots, qn
-             |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin)),
+             |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin),
+      harness = true),
 
     // Workspace transactions at streaming cadence (round 13): every
     // micro-batch maintains TWO dependent marts — per-type totals and the
@@ -653,7 +661,8 @@ object StreamingQueries {
       Some("""SELECT event_type, count(*) AS cnt,
              |       CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value,
              |       (SELECT count(DISTINCT user_id) FROM events) AS users_total
-             |FROM events GROUP BY event_type""".stripMargin)),
+             |FROM events GROUP BY event_type""".stripMargin),
+      harness = true),
 
     // Continuous N-ARY STAR-view maintenance, gated end-to-end: the
     // streaming twin of MatViews.maintainStar (foreachBatchStarViewMaintain
@@ -762,6 +771,7 @@ object StreamingQueries {
              |FROM orders JOIN customer ON o_custkey = c_custkey
              |            JOIN nation ON c_nationkey = n_nationkey
              |WHERE o_orderkey % 3 = 0 AND o_orderkey % 13 <> 0
-             |GROUP BY n_name""".stripMargin))
+             |GROUP BY n_name""".stripMargin),
+      harness = true)
   )
 }

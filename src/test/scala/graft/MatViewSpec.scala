@@ -1020,19 +1020,13 @@ class MatViewSpec extends SparkTestBase {
       MatViews.explainNavigation(df).head.reasons.collectFirst {
         case ("ex_t", r) => r }.getOrElse("<no ex_t reason>")
     try {
-      // rule NOT installed by THIS suite: the probe fully matches and the
-      // report tells the user the rule is missing — the most common
-      // real-world cause. Suite-order caveat: after RewriteRuleSpec runs,
-      // the SHARED session carries the GraftExtensions-injected rules, so
-      // the aggregate navigates anyway — then the served report is the
-      // correct answer and the tell is unreachable (assert whichever
-      // state the session is in, both through the public API).
+      // rule NOT installed: the probe fully matches and the report tells
+      // the user the rule is missing — the most common real-world cause
       val r0 = MatViews.explainNavigation(q())
       assert(r0.nonEmpty, "explain must report the aggregate")
-      if (r0.head.servedBy.isEmpty)
-        assert(reasonFor(q()).contains("would navigate"),
-          s"expected the rule-not-installed tell: $r0")
-      else assert(r0.head.servedBy.contains("ex_t"), s"unexpected server: $r0")
+      assert(r0.head.servedBy.isEmpty, s"no rule is installed, yet served: $r0")
+      assert(reasonFor(q()).contains("would navigate"),
+        s"expected the rule-not-installed tell: $r0")
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ MatViewRewrite
       try {

@@ -3,22 +3,25 @@ package graft
 import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class RewriteRuleSpec extends AnyFunSuite {
+class RewriteRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // getOrCreate would return any already-active session and silently skip
   // withExtensions — clear first so this suite really gets the rule
   private lazy val spark: SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+    Session.builder(4).withExtensions(new GraftExtensions).getOrCreate()
+  }
+
+  // leave no extension-carrying session behind for later suites' getOrCreate
+  // (the SparkContext stays up: it is shared by every suite in the JVM)
+  override def afterAll(): Unit = {
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    super.afterAll()
   }
 
   private def fixtures = {

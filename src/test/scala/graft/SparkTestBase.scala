@@ -3,16 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (lazy), UTC, small
-  * shuffle-partition count, nanos-as-long for the events table. */
+/** Shared local session for specs — one per suite (lazy), on the engine's
+  * one session configuration ([[Session]]). Four cores, explicitly: the
+  * suite must not follow `$SPARK_GRAFT_CPUS`. */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   val Sf001 = "/root/testdata/sf0.001"
 }
