@@ -36,8 +36,10 @@ import org.json4s.jackson.JsonMethods
   *
   * Each `add` carries the protocol's optional per-file `stats` JSON
   * (`numRecords` + `minValues`/`maxValues` for top-level numeric and string
-  * columns), read from the freshly-written parquet footers — a Delta reader
-  * gets file skipping on the same stats [[Storage.statsPrunedFiles]] uses.
+  * columns), read from the freshly-written parquet footers. The log is the
+  * ONLY record of those stats and of deletion vectors: [[MetaAgg]] prunes
+  * and aggregates from the same `add.stats` a Delta reader skips files
+  * with, and every DV read path decodes the same `add.deletionVector`.
   *
   * Scale note: the log is one small JSON file per commit, built from footer
   * metadata already in page cache from the write — commit cost stays
@@ -70,28 +72,6 @@ object DeltaInterop {
 
   def logFile(versionDir: Path): Path = versionDir.resolve(LogDirName).resolve(Commit0)
 
-  /** The commit's DECLARED schema (metaData.schemaString) without parsing
-    * add actions — the cheap read for schema alignment on the composed-read
-    * path (a large commit's log is mostly adds; alignment only needs the
-    * one metaData line). None when the version carries no log. */
-  def declaredSchema(versionDir: Path): Option[org.apache.spark.sql.types.StructType] = {
-    val log = logFile(versionDir)
-    if (!Files.exists(log)) None
-    else {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      new String(Files.readAllBytes(log), "UTF-8").split("\n").iterator
-        .filter(_.contains("\"metaData\""))
-        .map(JsonMethods.parse(_))
-        .collectFirst { case JObject(fields) if fields.exists(_._1 == "metaData") =>
-          val md = fields.collectFirst { case ("metaData", m) => m }.get
-          org.apache.spark.sql.types.DataType
-            .fromJson((md \ "schemaString").asInstanceOf[JString].s)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-        }
-    }
-  }
-
   /** One `add` action: `path` is a relative path inside the version dir or
     * an absolute `file:` URI (the shallow-clone carry). `stats` is the
     * protocol's JSON-as-string per-file stats payload. `dv` is the
@@ -106,7 +86,12 @@ object DeltaInterop {
       stats: Option[String],
       dv: Option[DeltaDv.Descriptor] = None)
 
-  final case class Snapshot(schemaJson: String, partitionColumns: Seq[String], adds: Seq[Add])
+  /** One parsed log: the declared schema, partition columns, the adds, and
+    * the protocol's reader features (typeWidening, deletionVectors). */
+  final case class Snapshot(schemaJson: String, partitionColumns: Seq[String], adds: Seq[Add],
+      features: Set[String]) {
+    def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+  }
 
   /** One `remove` tombstone as read back from the table log or carried in
     * a checkpoint: what vacuum coordination and incremental readers key on. */
@@ -274,36 +259,31 @@ object DeltaInterop {
       "nullCount" -> JObject(nullSide))))
   }
 
-  /** Carry the previous version's adds for partitions NOT rewritten by this
-    * commit, absolutized against the directory that owns their bytes. Pure
-    * log-to-log metadata: no data directory is listed. Falls back to listing
-    * only for pre-interop tables with no previous log. */
+  /** Carry the base version's adds for partitions NOT rewritten by this
+    * commit, absolutized against the directory that owns their bytes, each
+    * with its deletion-vector descriptor. Pure log-to-log metadata: no data
+    * directory is listed. `base` is the parsed log of `baseDir`. */
   private[graft] def carriedAdds(
-      spark: SparkSession,
-      table: Path,
-      baseVersion: Option[Long],
+      baseDir: Path,
+      base: Snapshot,
       manifest: Map[String, Long],
       rewritten: Set[String],
       partCol: String): Seq[Add] = {
-    val keep = manifest.view.filterKeys(!rewritten.contains(_)).toMap
-    if (keep.isEmpty) return Nil
-    val prevLog = baseVersion.map(b => logFile(table.resolve(s"v$b")))
-    prevLog.filter(Files.exists(_)) match {
-      case Some(log) =>
-        val base = table.resolve(s"v${baseVersion.get}")
-        readLog(log).adds
-          .filter(a => keep.contains(partDirName(a, partCol)))
-          .map(a => if (isAbsolute(a.path)) a
-                    else a.copy(path = base.resolve(a.path).toUri.toString))
-      case None => // legacy table: one listing per carried partition, once
-        keep.toSeq.sortBy(_._1).flatMap { case (part, ver) =>
-          val dir = table.resolve(s"v$ver").resolve(part)
-          val Array(k, v) = part.split("=", 2)
-          dataFilesUnder(dir).map(f => Add(f.toUri.toString, Map(k -> v),
-            Files.size(f), Files.getLastModifiedTime(f).toMillis, None))
-        }
-    }
+    val keep = manifest.keySet -- rewritten
+    base.adds
+      .filter(a => keep.contains(partDirName(a, partCol)))
+      .map(a => if (isAbsolute(a.path)) a
+                else a.copy(path = baseDir.resolve(a.path).toUri.toString))
   }
+
+  /** A data file's deletion-vector key: the last three path components,
+    * `v<owner>/<part>/<file>` — encoding-free (version dirs, int-valued
+    * bucket dirs, Spark part names), so a relative add resolved under
+    * `root`, an absolute `file:` URI and a scan's percent-encoded
+    * `_metadata.file_path` all map to the same key. */
+  private[graft] def dvKey(root: Path, path: String): String =
+    (if (isAbsolute(path)) path else root.resolve(path).toString)
+      .split('/').takeRight(3).mkString("/")
 
   private def partDirName(a: Add, partCol: String): String =
     a.partitionValues.get(partCol).map(v => s"$partCol=$v").getOrElse("")
@@ -321,16 +301,30 @@ object DeltaInterop {
 
   // ---- read side (the "external engine" path) -----------------------------
 
-  /** Parse a version directory's Delta log. */
-  def readLog(log: Path): Snapshot = {
-    require(Files.exists(log), s"no Delta log at $log")
-    val lines = new String(Files.readAllBytes(log), "UTF-8").split("\n").filter(_.nonEmpty)
+  /** Parse a version directory's Delta log. A committed version without
+    * one is damaged — it fails loudly, naming the log path (table and
+    * version). `dvAddsOnly` parses only the adds that carry a deletion
+    * vector (the composed-read path needs the schema and the tombstones,
+    * not every file's stats). */
+  def readLog(log: Path, dvAddsOnly: Boolean = false): Snapshot = {
+    require(Files.exists(log),
+      s"no Delta log at $log — every committed version records its files there")
+    def skipped(l: String) =
+      dvAddsOnly && l.startsWith("{\"add\"") && !l.contains("\"deletionVector\"")
+    val lines = new String(Files.readAllBytes(log), "UTF-8").split("\n")
+      .filter(l => l.nonEmpty && !skipped(l))
     var schemaJson = ""
     var partCols = Seq.empty[String]
+    var features = Set.empty[String]
     val adds = Seq.newBuilder[Add]
     lines.foreach { l =>
       JsonMethods.parse(l) match {
         case JObject(fields) => fields.foreach {
+          case ("protocol", p) =>
+            features = p \ "readerFeatures" match {
+              case JArray(fs) => fs.collect { case JString(f) => f }.toSet
+              case _ => Set.empty
+            }
           case ("metaData", md) =>
             schemaJson = (md \ "schemaString").asInstanceOf[JString].s
             partCols = (md \ "partitionColumns").asInstanceOf[JArray]
@@ -353,7 +347,7 @@ object DeltaInterop {
       }
     }
     require(schemaJson.nonEmpty, s"Delta log $log has no metaData action")
-    Snapshot(schemaJson, partCols, adds.result())
+    Snapshot(schemaJson, partCols, adds.result(), features)
   }
 
   /** Read a committed version EXACTLY the way an external Delta engine
@@ -361,20 +355,6 @@ object DeltaInterop {
     * read, the metaData schemaString types the scan, and partition-column
     * values come from each add's `partitionValues` (they are NOT in the
     * data files). Used by the `io1` oracle row and DeltaInteropSpec. */
-  /** The protocol features a log's protocol action declares (empty when
-    * legacy-versioned or unreadable) — the per-version stickiness probe. */
-  private[graft] def logFeatures(log: Path): Set[String] =
-    if (!Files.exists(log)) Set.empty
-    else try {
-      new String(Files.readAllBytes(log), "UTF-8").split("\n")
-        .find(_.contains("\"protocol\"")).map { l =>
-          JsonMethods.parse(l) \ "protocol" \ "readerFeatures" match {
-            case JArray(fs) => fs.collect { case JString(s) => s }.toSet
-            case _ => Set.empty[String]
-          }
-        }.getOrElse(Set.empty)
-    } catch { case _: Throwable => Set.empty }
-
   def readSnapshot(spark: SparkSession, versionDir: Path): DataFrame = {
     val snap = readLog(logFile(versionDir))
     buildFrame(spark, versionDir, snap.schemaJson, snap.partitionColumns, snap.adds)
@@ -417,7 +397,7 @@ object DeltaInterop {
     if (!anyDv) composed
     else {
       val doomed = adds.flatMap { a =>
-        val key = resolve(a.path).split('/').takeRight(3).mkString("/")
+        val key = dvKey(root, a.path)
         a.dv.toSeq.flatMap(d => DeltaDv.rows(d).map(r => (key, r)))
       }
       import spark.implicits._

@@ -376,8 +376,9 @@ object MergeOps {
 
   /** [[prunedDelete]]'s takedown with MERGE-ON-READ deletion vectors (the
     * Delta/Iceberg DV shape): instead of rewriting every bucket that loses
-    * a row, commit an O(k) `_DV.json` sidecar naming the doomed rows'
-    * (file, row-index) coordinates. Every read of the version — upserts,
+    * a row, commit O(k) `add.deletionVector` descriptors in the version's
+    * Delta log naming the doomed rows' (file, row-index) coordinates
+    * ([[graft.ops.DeltaDv]]). Every read of the version — upserts,
     * CDF snapshots, time travel — subtracts them via a broadcast anti-join
     * inside [[Storage.readPartitionedVersionAt]], so the rows vanish
     * table-wide with ZERO data files rewritten: a k-row GDPR takedown
@@ -389,11 +390,10 @@ object MergeOps {
     * [[prunedDelete]], which rewrites. Tombstones ride along carried
     * buckets until [[compactDeletionVectors]] (or any organic rewrite of
     * the bucket) materializes them; external engines see the SAME deletes
-    * meanwhile through the `add.deletionVector` descriptors the commit
-    * writes into both Delta logs ([[graft.ops.DeltaDv]]). Same no-op
-    * contract as prunedDelete: absent keys tombstone nothing, a table
-    * with no committed version returns -1. Returns the committed
-    * version. */
+    * meanwhile through the same descriptors, which the commit writes into
+    * both Delta logs. Same no-op contract as prunedDelete: absent keys
+    * tombstone nothing, a table with no committed version returns -1.
+    * Returns the committed version. */
   def deleteWithVectors(
       table: java.nio.file.Path,
       doomed: DataFrame,
@@ -422,14 +422,14 @@ object MergeOps {
     val matchCond = pk.map(c => col(s"o.$c") <=> col(s"k.$c")).reduce(_ && _)
     val hits = lineage.join(keys, matchCond, "left_semi")
       .select(col("__dv_file"), col("__dv_pos")).collect()
-    // __dv_file is already the sidecar's table-relative `v<ver>/<part>/
-    // <file>` form (Storage.readPartitionedAt0) — no path relativize, so
+    // __dv_file is already the descriptors' table-relative `v<ver>/<part>/
+    // <file>` key form (DeltaInterop.dvKey) — no path relativize, so
     // a table root with URI-encodable characters cannot mis-resolve
     val dv = hits.groupBy(_.getString(0)).map { case (rel, rows) =>
       rel -> rows.map(_.getLong(1)).toSeq.sorted
     }.toMap
     // empty delta frame: every bucket carries by reference; the commit is
-    // the sidecar + manifest + log — the whole point
+    // the manifest + the descriptor-carrying log — the whole point
     Storage.commitPartitions(
       Storage.readPartitionedVersionAt(spark, table, readV).limit(0), table, "pbucket",
       keepVersions = keepVersions, deletionVector = dv,

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions.{col, count, lit}
 object MetaAgg {
 
   /** One live file's parsed stats. `mins`/`maxs` carry (tag, value) in the
-    * same ("i" | "f" | "s", string) form as the footer-stats manifest. */
+    * same ("i" | "f" | "s", string) form as [[Storage.readFooterStats]]. */
   private final case class FileStat(
       path: String,
       rows: Long,
@@ -47,12 +47,12 @@ object MetaAgg {
 
   /** [[liveStats]] pinned to an explicit retained version — for callers
     * holding a read-snapshot pin (the SCD2 SK high-water mark). */
-  private def liveStatsAt(table: Path, v: Long): Option[Seq[FileStat]] = {
+  private def liveStatsAt(table: Path, v: Long): Option[Seq[FileStat]] =
+    statsOf(DeltaInterop.readLog(DeltaInterop.logFile(table.resolve(s"v$v"))))
+
+  private def statsOf(snap: DeltaInterop.Snapshot): Option[Seq[FileStat]] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val log = DeltaInterop.logFile(table.resolve(s"v$v"))
-    if (!Files.exists(log)) return None
-    val snap = DeltaInterop.readLog(log)
     def side(j: JValue): Map[String, (String, String)] = j match {
       case JObject(fields) => fields.flatMap {
         case (c, JInt(n)) => Some(c -> ("i", n.toString))
@@ -98,14 +98,12 @@ object MetaAgg {
     * add's deletionVector descriptor carries its exact cardinality, so
     * the VISIBLE count is Σ(numRecords − dv.cardinality) — still exact
     * under merge-on-read deletes. None only when a live file is statless. */
-  def rowCount(table: Path): Option[Long] =
-    rowCountOfVersion(table, Storage.currentVersion(table).getOrElse(return Some(0L)))
+  def rowCount(table: Path): Option[Long] = {
+    val v = Storage.currentVersion(table).getOrElse(return Some(0L))
+    rowCountOf(DeltaInterop.readLog(DeltaInterop.logFile(table.resolve(s"v$v"))).adds)
+  }
 
-  /** [[rowCount]] for an explicit retained version (history walks). */
-  private[ops] def rowCountOfVersion(table: Path, v: Long): Option[Long] = {
-    val log = DeltaInterop.logFile(table.resolve(s"v$v"))
-    if (!Files.exists(log)) return None
-    val adds = DeltaInterop.readLog(log).adds
+  private def rowCountOf(adds: Seq[DeltaInterop.Add]): Option[Long] = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val per = adds.map { a =>
@@ -247,10 +245,8 @@ object MetaAgg {
     }
 
   /** Range-pruned read of EITHER table flavor, driven by the per-file
-    * stats in the current version's Delta log — the partitioned-table
-    * completion of [[Storage.readVersionPruned]]'s promise: only files
-    * whose [min, max] on `column` intersects [lo, hi] are handed to the
-    * scan, composing with the manifest's bucket-level pruning (carried
+    * stats in the current version's Delta log: only files whose [min, max]
+    * on `column` intersects [lo, hi] are handed to the scan, composing with the manifest's bucket-level pruning (carried
     * adds keep their stats in the log, so long-carried buckets prune as
     * well as fresh ones). Semantically identical to reading the table and
     * filtering — the caller still applies its own predicate; this just
@@ -268,16 +264,16 @@ object MetaAgg {
     * prunes multiplicatively from the same one-pass metadata scan. */
   def readPrunedWhere(spark: SparkSession, table: Path,
       ranges: Seq[RangePred]): DataFrame = {
-    liveStats(table) match {
+    val v = Storage.currentVersion(table).getOrElse(return readAny(spark, table))
+    val vdir = table.resolve(s"v$v")
+    // one log parse: the stats to prune by and the schema to type by
+    val snap = DeltaInterop.readLog(DeltaInterop.logFile(vdir))
+    statsOf(snap) match {
       case None => readAny(spark, table)
       case Some(fs) =>
         if (fs.exists(f => f.hasDv || !f.tight)) return readAny(spark, table)
-        val v = Storage.currentVersion(table).get
-        val vdir = table.resolve(s"v$v")
         val kept = fs.filter(f => ranges.forall(r => mayMatch(f, r)))
-        val declared = org.apache.spark.sql.types.DataType.fromJson(
-          DeltaInterop.readLog(DeltaInterop.logFile(vdir)).schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
+        val declared = snap.schema
         // everything pruned: the empty frame types from the DECLARED
         // schema — opening a data file just to learn the shape would
         // break the zero-reads contract (and a limit(0) over the full
@@ -318,7 +314,8 @@ object MetaAgg {
     * version its visible row count (exact, DV-aware; null when a
     * statless commit makes it unknowable), how many partitions the
     * commit owns vs carries by reference (the write-amplification
-    * ledger), and its live tombstone count. */
+    * ledger), and its live tombstone count (the log's deletion-vector
+    * cardinalities). One log parse per version. */
   def history(spark: SparkSession, table: Path): DataFrame = {
     import spark.implicits._
     val cur = Storage.currentVersion(table).getOrElse(-1L)
@@ -332,10 +329,10 @@ object MetaAgg {
           else None
         val own = manifest.map(_.count(_._2 == v).toLong)
         val carried = manifest.map(m => (m.size - m.count(_._2 == v)).toLong)
-        val dvRows = Storage.readDeletionVector(vdir).values.map(_.size.toLong).sum
+        val adds = DeltaInterop.readLog(DeltaInterop.logFile(vdir)).adds
+        val dvRows = adds.flatMap(_.dv).map(_.cardinality).sum
         Some((v, manifest.fold("full")(_ => "partitioned"),
-          rowCountOfVersion(table, v),
-          own.getOrElse(0L), carried.getOrElse(0L), dvRows))
+          rowCountOf(adds), own.getOrElse(0L), carried.getOrElse(0L), dvRows))
       }
     }
     rows.toDF("version", "kind", "row_cnt", "own_parts", "carried_parts", "dv_rows")

@@ -7,91 +7,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Table storage with transaction-like replacement semantics (SURVEY.md §2.7
   * M4): the reference wraps its SCD2 close+insert in `BEGIN…COMMIT`
   * (dwh_dim_character.py:53,116). Parquet has no cross-statement
-  * transactions, so the equivalent is: compute the table's ENTIRE next state
-  * in one job, write it to a temp directory, then atomically swap directory
-  * names. Readers see the old state or the new state, never a mix. On a real
-  * deployment the same call sites map 1:1 onto Delta/Iceberg MERGE commits.
+  * transactions, so the equivalent is: write the next state into a staging
+  * directory, rename it into place as version `v<N>`, then swap the
+  * `_LATEST` pointer. Readers see the old state or the new state, never a
+  * mix. Each version's `_delta_log` is the one record of its files, their
+  * stats and their deletion vectors; on a real deployment the same call
+  * sites map 1:1 onto Delta/Iceberg MERGE commits.
   *
-  * Scale note: the swap is a metadata operation — cost is independent of
+  * Scale note: the promote is a metadata operation — cost is independent of
   * table size; the write is the usual distributed parquet write.
   */
 object Storage {
 
-  def read(spark: SparkSession, table: Path): DataFrame = {
-    recover(table)
-    spark.read.parquet(table.toString)
-  }
-
-  /** Read `table` if it exists, else `empty` — the ONLY correct
-    * first-run/bootstrap check on a managed table. Recovery runs before
-    * the existence test so a crash inside [[atomicReplace]]'s swap window
-    * (only `.old` present) reads as the previous state, not as "table
-    * never existed" — a bare `Files.exists` there would silently rebuild
-    * the layer from empty, losing audit history and SK continuity. */
-  def readOr(spark: SparkSession, table: Path, empty: => DataFrame): DataFrame = {
-    recover(table)
-    if (Files.exists(table)) spark.read.parquet(table.toString) else empty
-  }
-
-  /** Write `next` as the new content of `table` via write-temp-then-swap.
-    *
-    * Crash safety (single-writer): each individual move is atomic, but the
-    * two-move swap has a window where only `.old` exists — [[recover]]
-    * (called by [[read]] and on entry here) rolls the table back to the
-    * old state if a crash hit that window, so no state is ever lost.
-    * CONCURRENT readers during the window would see path-not-found; true
-    * reader isolation needs a pointer/log layer, which is exactly what the
-    * documented Delta/Iceberg mapping provides at deploy. */
-  def atomicReplace(next: DataFrame, table: Path): Unit = {
-    recover(table)
-    val tmp = table.resolveSibling(table.getFileName.toString + ".tmp")
-    val old = table.resolveSibling(table.getFileName.toString + ".old")
-    deleteRecursively(tmp)
-    next.write.mode("overwrite").parquet(tmp.toString)
-    deleteRecursively(old)
-    if (Files.exists(table)) Files.move(table, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, table, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
-  }
-
-  /** Roll back a swap interrupted between its two moves: the table path is
-    * gone but `.old` holds the complete previous state. Public because
-    * ANY existence check on a managed table must recover first — a bare
-    * `Files.exists` would read an interrupted swap as "table never
-    * existed" and silently rebuild from empty state. */
-  def recover(table: Path): Unit = {
-    val old = table.resolveSibling(table.getFileName.toString + ".old")
-    if (!Files.exists(table) && Files.exists(old))
-      Files.move(old, table, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Deploy-shape layout: a table partitioned by low-cardinality columns
-    * (load date, region, …) so predicate pushdown becomes partition
-    * PRUNING — the scan never opens non-matching directories. Dynamic
-    * partition overwrite replaces only the partitions present in `df`
-    * (the incremental-load write mode). */
-  def writePartitioned(df: DataFrame, table: Path, partitionCols: Seq[String]): Unit =
-    df.write
-      .partitionBy(partitionCols: _*)
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(table.toString)
-
   // ---- versioned commit log ----------------------------------------------
   //
-  // atomicReplace has one documented hole: CONCURRENT readers during its
-  // two-move swap window see path-not-found. The fix is the minimal form of
-  // the Delta/Iceberg idea — never move data directories at all. Each commit
-  // writes a brand-new immutable version directory `v<N>` and then atomically
-  // swaps a one-line pointer file `_LATEST`. Readers resolve the pointer and
-  // read that directory: they see the old version or the new version, never
-  // a missing path, and a long-running scan that resolved `v3` keeps reading
-  // `v3` even while `v4` commits underneath it (snapshot isolation for the
-  // duration of the job). Old versions are vacuumed only AFTER the pointer
-  // moves on, with a keep-window for in-flight readers.
+  // Swapping whole directories would give CONCURRENT readers a
+  // path-not-found window mid-swap. The commit log is the minimal form of
+  // the Delta/Iceberg idea instead — never move data directories at all.
+  // Each commit writes a brand-new immutable version directory `v<N>` and
+  // then atomically swaps a one-line pointer file `_LATEST`. Readers resolve
+  // the pointer and read that directory: they see the old version or the new
+  // version, never a missing path, and a long-running scan that resolved
+  // `v3` keeps reading `v3` even while `v4` commits underneath it (snapshot
+  // isolation for the duration of the job). Old versions are vacuumed only
+  // AFTER the pointer moves on, with a keep-window for in-flight readers.
   //
   // Commit cost is one small-file write + one rename — metadata-only,
-  // independent of table size, same as atomicReplace.
+  // independent of table size.
   //
   // CONCURRENT WRITERS (lost-update guard): data is written to a unique
   // staging directory, then promoted with an atomic rename to `v<N>` —
@@ -108,8 +50,6 @@ object Storage {
 
   private val Latest = "_LATEST"
   private val PartsManifest = "_PARTS.json"
-  private val StatsManifest = "_STATS.json"
-  private[graft] val DvFile = "_DV.json"
   // "skip the footer pass" sentinel for DeltaInterop.writeCommit0, whose
   // footerStats param treats None as "compute it yourself" — Some(empty)
   // is the only way to say "no stats" (protocol-legal: Delta adds may
@@ -308,8 +248,8 @@ object Storage {
     * number. `keepVersions` older versions are retained for in-flight
     * readers before vacuum. Fails with `ConcurrentModificationException`
     * if another writer commits the same version first (see the CAS notes
-    * above). Also writes the per-file min/max stats manifest consulted by
-    * [[readVersionPruned]].
+    * above). The version's Delta log records every data file with its
+    * per-file stats ([[MetaAgg]] prunes and aggregates from them).
     *
     * `extraFiles` (name → content, names must be hidden: `_`/`.` prefix)
     * land INSIDE the staging dir before the atomic promote — transaction
@@ -317,9 +257,9 @@ object Storage {
     * action's role: e.g. the applied-source-version marker that makes a
     * change-feed consumer's apply idempotent).
     *
-    * `fileStats = false` skips the per-file min/max footer pass (no
-    * `_STATS.json`; Delta adds carry no stats — protocol-legal): stats
-    * exist for FILE SKIPPING, which buys nothing on a small hot table
+    * `fileStats = false` skips the per-file min/max footer pass (the log's
+    * adds carry no stats — protocol-legal): stats exist for FILE
+    * SKIPPING, which buys nothing on a small hot table
     * committed every micro-batch; readers conservatively keep statless
     * files, and scheduled compaction (which commits with stats) restores
     * skipping. Leave it on for any table a selective scan reads. */
@@ -334,12 +274,11 @@ object Storage {
     val staging = newStaging(table, v)
     Prof.time("commitVersion.write")(
       next.write.mode("overwrite").parquet(staging.toString))
-    // one footer pass feeds both the skipping manifest and the Delta log
+    // one footer pass feeds both Delta logs (per-version and table-level)
     val footerStats =
       if (fileStats) Some(Prof.time("commitVersion.footerStats")(
         readFooterStats(next.sparkSession, staging)))
       else NoFileStats
-    if (fileStats) writeStatsManifest(next.sparkSession, staging, footerStats)
     val adds = Prof.time("commitVersion.writeCommit0")(
       DeltaInterop.writeCommit0(next.sparkSession, staging, next.schema, Nil,
         footerStats = footerStats))
@@ -550,9 +489,6 @@ object Storage {
     val sv = currentVersion(src).getOrElse(
       throw new IllegalStateException(s"no committed version to clone at $src"))
     val svDir = src.resolve(s"v$sv")
-    val log = DeltaInterop.logFile(svDir)
-    require(Files.exists(log),
-      s"$src v$sv has no Delta log — only logged commits are cloneable")
     require(currentVersion(dst).isEmpty && !Files.exists(dst.resolve(Latest)),
       s"clone target $dst already has committed state")
     Files.createDirectories(dst)
@@ -562,14 +498,13 @@ object Storage {
     val pinName = s"$ClonePin.v$sv.${java.util.UUID.randomUUID.toString.take(8)}"
     Files.write(src.resolve(pinName), dst.toAbsolutePath.toString.getBytes("UTF-8"))
     try {
-      val snap = DeltaInterop.readLog(log)
-      val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val snap = DeltaInterop.readLog(DeltaInterop.logFile(svDir))
+      val schema = snap.schema
       val abs = snap.adds.map { a =>
         if (a.path.startsWith("file:") || a.path.startsWith("/") || a.path.contains("://")) a
         else a.copy(path = svDir.resolve(a.path).toUri.toString)
       }
-      val features = DeltaInterop.logFeatures(log)
+      val features = snap.features
       val staging = newStaging(dst, 0)
       Files.createDirectories(staging)
       try {
@@ -656,7 +591,7 @@ object Storage {
       require(foreign.isEmpty,
         s"$table exists but is not a versioned table (found: " +
           s"${foreign.take(3).mkString(", ")}) — refusing to commit into it; " +
-          "migrate with commitVersion(read(spark, table), table) on a fresh path")
+          "migrate with commitVersion(spark.read.parquet(table), freshPath)")
     }
 
   /** Whether a version directory holds any VISIBLE entry (data file or
@@ -672,8 +607,8 @@ object Storage {
   }
 
   /** Directory-or-log read of one version dir: a dir with data files reads
-    * as plain parquet; a data-less dir with a Delta log (shallow clone /
-    * metadata-only commit) reads through the log's adds — absolute-URI
+    * as plain parquet; a data-less dir (shallow clone / metadata-only
+    * commit) reads through its Delta log's adds — absolute-URI
     * references into the clone source resolve there, deletion-vector
     * descriptors are subtracted, exactly as an external engine reads it. */
   private def readVersionDir(spark: SparkSession, dir: Path): DataFrame =
@@ -681,8 +616,7 @@ object Storage {
     // committed version dir never changes bytes, so the built plan reuses
     cachedBuild(spark, ("flat", dir.toAbsolutePath.toString,
         Files.getLastModifiedTime(dir).toMillis)) {
-      if (!hasDataEntries(dir) && Files.exists(DeltaInterop.logFile(dir)))
-        DeltaInterop.readSnapshot(spark, dir)
+      if (!hasDataEntries(dir)) DeltaInterop.readSnapshot(spark, dir)
       else spark.read.parquet(dir.toString)
     }
 
@@ -704,12 +638,12 @@ object Storage {
     readVersionDir(spark, dir)
   }
 
-  /** [[readVersion]] with a bootstrap default, mirroring [[readOr]].
-    * A directory that exists but is NOT a versioned layout (a flat
-    * atomicReplace-era table, say) fails loudly instead of reading as
-    * "never existed" — silently bootstrapping a populated layer from
-    * empty loses audit history and restarts SK sequences, the exact
-    * failure [[readOr]]'s recover-first contract exists to prevent. */
+  /** [[readVersion]] with a bootstrap default — the ONLY correct
+    * first-run check on a managed table. A directory that exists but is
+    * NOT a versioned layout (plain parquet written by another tool, say)
+    * fails loudly instead of reading as "never existed" — silently
+    * bootstrapping a populated layer from empty loses audit history and
+    * restarts SK sequences. */
   def readVersionOr(spark: SparkSession, table: Path, empty: => DataFrame): DataFrame =
     currentVersion(table) match {
       case Some(v) => readVersionDir(spark, table.resolve(s"v$v"))
@@ -725,20 +659,21 @@ object Storage {
           require(foreign.isEmpty,
             s"$table exists but is not a versioned table (found: " +
               s"${foreign.take(3).mkString(", ")}) — refusing to treat it as " +
-              "empty; migrate with commitVersion(read(spark, table), freshPath)")
+              "empty; migrate with commitVersion(spark.read.parquet(table), freshPath)")
         }
         empty
     }
 
-  // ---- per-file min/max stats manifest (file skipping) -------------------
+  // ---- per-file min/max stats (file skipping) ----------------------------
   //
   // Parquet already carries row-group min/max, but the engine only sees
-  // them AFTER listing and opening every file. The commit-time manifest
-  // lifts per-FILE min/max into table metadata (read from the freshly
-  // written footers — metadata-only, no data pass), so a selective read
-  // prunes files before the scan ever lists them into a FileIndex. This is
-  // what completes the z-order promise at 100 TB: cluster on the key
-  // (ZOrder), then skip whole files by key range here.
+  // them AFTER listing and opening every file. The commit lifts per-FILE
+  // min/max into each add's `stats` in the version's Delta log (read from
+  // the freshly written footers — metadata-only, no data pass), so a
+  // selective read ([[MetaAgg.readPrunedWhere]]) prunes files before the
+  // scan ever lists them into a FileIndex. This is what completes the
+  // z-order promise at 100 TB: cluster on the key (ZOrder), then skip whole
+  // files by key range.
 
   /** relative path → (rowCount, column → (typeTag, min, max), column →
     * nullCount); built from parquet footers — metadata-only, no data pass.
@@ -835,77 +770,6 @@ object Storage {
     }
   }
 
-  private def writeStatsManifest(
-      spark: SparkSession, dir: Path,
-      precomputed: Option[Map[String, (Long, Map[String, (String, String, String)], Map[String, Long])]] = None): Unit = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val stats = precomputed.getOrElse(readFooterStats(spark, dir))
-    val json = JObject(stats.toSeq.sortBy(_._1).map { case (f, (_, cols, _)) =>
-      f -> JObject(cols.toSeq.sortBy(_._1).map { case (c, (t, mn, mx)) =>
-        c -> JObject(List("t" -> JString(t), "min" -> JString(mn), "max" -> JString(mx)))
-      }.toList)
-    }.toList)
-    Files.write(dir.resolve(StatsManifest),
-      JsonMethods.compact(JsonMethods.render(json)).getBytes("UTF-8"))
-  }
-
-  private def readStatsManifest(dir: Path): Map[String, Map[String, (String, String, String)]] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val p = dir.resolve(StatsManifest)
-    if (!Files.exists(p)) Map.empty
-    else JsonMethods.parse(new String(Files.readAllBytes(p), "UTF-8")) match {
-      case JObject(files) => files.map { case (f, JObject(cols)) =>
-        f -> cols.map { case (c, v) =>
-          def s(k: String) = (v \ k).asInstanceOf[JString].s
-          c -> (s("t"), s("min"), s("max"))
-        }.toMap
-      }.toMap
-      case _ => Map.empty
-    }
-  }
-
-  /** The files of the committed version whose `[min, max]` on `column`
-    * intersects `[lo, hi]` (numeric columns), plus the total file count.
-    * Files with no recorded stats for the column are conservatively kept. */
-  def statsPrunedFiles(
-      table: Path, column: String, lo: Double, hi: Double): (Seq[Path], Int) = {
-    val v = currentVersion(table).getOrElse(
-      throw new IllegalStateException(s"no committed version at $table"))
-    val dir = table.resolve(s"v$v")
-    val stats = readStatsManifest(dir)
-    val s = Files.list(dir)
-    val all =
-      try s.toArray.map(_.asInstanceOf[Path])
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .sortBy(_.getFileName.toString).toSeq
-      finally s.close()
-    val kept = all.filter { f =>
-      stats.get(f.getFileName.toString).flatMap(_.get(column)) match {
-        case Some((t, mn, mx)) if t == "i" || t == "f" =>
-          BigDecimal(mx) >= BigDecimal(lo) && BigDecimal(mn) <= BigDecimal(hi)
-        case _ => true
-      }
-    }
-    (kept, all.size)
-  }
-
-  /** Read the committed version with manifest-driven file skipping for a
-    * range predicate on `column`. Semantically identical to
-    * `readVersion(...).filter(column between lo and hi)` — the caller still
-    * applies its own filter; this just hands Spark fewer files. */
-  def readVersionPruned(
-      spark: SparkSession, table: Path, column: String, lo: Double, hi: Double): DataFrame = {
-    val (kept, all) = statsPrunedFiles(table, column, lo, hi)
-    // a metadata-only version (shallow clone) holds no local files to
-    // prune — read it whole through the log; skipping resumes after the
-    // clone's first own rewrite lands real files + a stats manifest
-    if (all == 0) readVersion(spark, table)
-    else if (kept.isEmpty) readVersion(spark, table).limit(0)
-    else spark.read.parquet(kept.map(_.toString): _*)
-  }
-
   // ---- partitioned commit log (pruned incremental writes) ----------------
   //
   // A plain commitVersion rewrites the whole table every commit — O(table)
@@ -937,53 +801,38 @@ object Storage {
   //
   // A k-row takedown that rewrites every bucket containing a hit pays
   // O(hit buckets) data writes for O(k) logical deletes. The deletion
-  // vector is the Delta/Iceberg answer: a per-version `_DV.json` sidecar
-  // mapping table-root-relative data-file path → sorted row positions
-  // (parquet `_metadata.row_index`) that are DELETED from that file. The
-  // commit is O(k) metadata; EVERY read of the version (readPartitioned-
-  // VersionAt and everything built on it — upserts, CDF snapshots, time
-  // travel) applies the vector as a broadcast anti-join on
-  // (file, row_index), so deleted rows are invisible table-wide without a
-  // byte of data rewritten. Later rewrites of a bucket materialize its
-  // deletions and the carry-forward prunes those entries; scheduled
-  // [[MergeOps.compactDeletionVectors]] clears the rest.
-  //
-  // External readers see the same deletes WITHOUT the sidecar: every
-  // DV-carrying commit attaches the protocol's `add.deletionVector`
-  // descriptor (inline Z85 RoaringBitmap payload, [[DeltaDv]]) to the
-  // affected adds in both the per-version and table-level Delta logs, and
-  // bumps the protocol action to the deletion-vectors table feature — so
-  // post-delete state is readable from `_delta_log` alone, pre-compaction
-  // (DeltaInteropSpec proves it via [[DeltaInterop.readTableSnapshot]]).
+  // vector is the Delta/Iceberg answer: the `add` of each tombstoned data
+  // file carries the protocol's `deletionVector` descriptor (an inline Z85
+  // RoaringBitmap of the parquet `_metadata.row_index` positions DELETED
+  // from that file, [[DeltaDv]]) in both the per-version and table-level
+  // Delta logs, and the protocol action declares the deletion-vectors
+  // table feature. The commit is O(k) metadata; EVERY read of the version
+  // (readPartitionedVersionAt and everything built on it — upserts, CDF
+  // snapshots, time travel) applies the vectors as a broadcast anti-join
+  // on (file, row_index), so deleted rows are invisible table-wide without
+  // a byte of data rewritten. A rewritten bucket's fresh adds carry no
+  // descriptor (the rewrite materialized its deletions); scheduled
+  // [[MergeOps.compactDeletionVectors]] clears the rest. External readers
+  // replay the same descriptors — post-delete state from `_delta_log`
+  // alone, pre-compaction (DeltaInteropSpec proves it via
+  // [[DeltaInterop.readTableSnapshot]]).
 
-  /** The deletion vector committed WITH version dir `versionDir`: relative
-    * file path → ascending deleted row positions. Empty when none. */
-  private[graft] def readDeletionVector(versionDir: Path): Map[String, Seq[Long]] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val p = versionDir.resolve(DvFile)
-    if (!Files.exists(p)) Map.empty
-    else JsonMethods.parse(new String(Files.readAllBytes(p), "UTF-8")) match {
-      case JObject(fields) => fields.map {
-        case (f, JArray(ids)) => f -> ids.map {
-          case JInt(n) => n.toLong
-          case JLong(n) => n
-          case other => throw new IllegalStateException(s"bad DV position $other in $p")
-        }
-        case (f, other) => throw new IllegalStateException(s"bad DV entry $f -> $other")
-      }.toMap
-      case _ => Map.empty
-    }
-  }
+  /** The descriptors among `adds` (parsed from `versionDir`'s log), keyed
+    * by [[DeltaInterop.dvKey]]: table-relative `v<owner>/<part>/<file>`. */
+  private def dvDescriptors(versionDir: Path,
+      adds: Seq[DeltaInterop.Add]): Map[String, DeltaDv.Descriptor] =
+    adds.collect { case a if a.dv.nonEmpty =>
+      DeltaInterop.dvKey(versionDir, a.path) -> a.dv.get }.toMap
 
-  private[graft] def deletionVectorJson(dv: Map[String, Seq[Long]]): String = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    JsonMethods.compact(JsonMethods.render(JObject(
-      dv.toSeq.sortBy(_._1).map { case (f, ids) =>
-        f -> (JArray(ids.sorted.map(JLong(_)).toList): JValue)
-      }.toList)))
-  }
+  private def dvDescriptorsAt(versionDir: Path): Map[String, DeltaDv.Descriptor] =
+    dvDescriptors(versionDir, DeltaInterop.readLog(
+      DeltaInterop.logFile(versionDir), dvAddsOnly = true).adds)
+
+  /** The deletion vectors of version dir `versionDir`, decoded from its
+    * log: `v<owner>/<part>/<file>` → ascending deleted row positions.
+    * Empty when none. */
+  private[graft] def readDeletionVector(versionDir: Path): Map[String, Seq[Long]] =
+    dvDescriptorsAt(versionDir).map { case (f, d) => f -> DeltaDv.rows(d) }
 
   /** The CURRENT version's deletion vector (empty when none). */
   def deletionVector(table: Path): Map[String, Seq[Long]] =
@@ -1111,14 +960,14 @@ object Storage {
     * live.
     *
     * `deletionVector` adds merge-on-read tombstones: table-root-relative
-    * data-file path → row indexes DELETED from it, committed as the
-    * version's `_DV.json` sidecar and merged with the surviving previous
-    * tombstones. New entries must target files in buckets this commit
-    * CARRIES (a bucket being rewritten materializes its deletions through
-    * the DV-applying read path instead); previous entries are shed exactly
-    * when their bucket's bytes are — rewritten or dropped here. A
-    * concurrent winner touching a tombstoned bucket is an overlap
-    * conflict, same as touching a written one.
+    * `v<owner>/<part>/<file>` data-file path → row indexes DELETED from
+    * it, merged into that file's carried `add.deletionVector` descriptor
+    * in the version's Delta log. New entries must target files in buckets
+    * this commit CARRIES (a bucket being rewritten materializes its
+    * deletions through the DV-applying read path instead); previous
+    * tombstones are shed exactly when their bucket's bytes are — rewritten
+    * or dropped here. A concurrent winner touching a tombstoned bucket is
+    * an overlap conflict, same as touching a written one.
     *
     * `readBase` closes the READ-SNAPSHOT half of the OCC story (the rename
     * CAS alone only serializes writers racing the same version SLOT): the
@@ -1152,8 +1001,6 @@ object Storage {
       staleOnAny: Boolean = false): Long = {
     require(!dropAbsent || dropParts.isEmpty,
       "dropAbsent replaces dropParts — passing both is contradictory")
-    require(!extraFiles.contains(DvFile),
-      s"$DvFile is managed by the deletionVector parameter, not extraFiles")
     require(keepVersions >= 1, s"keepVersions must be >= 1 (got $keepVersions)")
     // a leading _/. would write partition dirs Spark's listing treats as
     // hidden — silently invisible data
@@ -1176,6 +1023,12 @@ object Storage {
     }
     val v = base.getOrElse(-1L) + 1
     val prev = base.map(b => readPartsManifest(table.resolve(s"v$b"))).getOrElse(Map.empty)
+    // each base version's Delta log is parsed at most once per commit: it
+    // types the declared schema, carries the untouched buckets' adds (with
+    // their deletion vectors) forward, and feeds the OCC tombstone diff
+    val baseLogs = scala.collection.mutable.Map.empty[Long, DeltaInterop.Snapshot]
+    def baseLog(b: Long): DeltaInterop.Snapshot = baseLogs.getOrElseUpdate(b,
+      DeltaInterop.readLog(DeltaInterop.logFile(table.resolve(s"v$b"))))
     // The DECLARED schema evolves add-only plus SAFE WIDENING: new columns
     // append; an existing column may widen along the lossless lattice
     // (byte/short/int→long, float→double, decimal precision up at equal
@@ -1194,7 +1047,7 @@ object Storage {
     // `delta.typeChanges` metadata so an external reader knows the narrow
     // physical files are intentional.
     def declareAgainst(b: Option[Long]): (org.apache.spark.sql.types.StructType, Boolean) =
-      b.flatMap(bb => DeltaInterop.declaredSchema(table.resolve(s"v$bb"))) match {
+      b.map(bb => baseLog(bb).schema) match {
         case None => (next.schema, false)
         case Some(p) =>
           val newFields = next.schema.map(f => f.name -> f).toMap
@@ -1325,58 +1178,52 @@ object Storage {
             manifest.get(b).fold("not in the manifest")(o => s"owned by v$o") +
             " — stale coordinates, relocate against the current version")
       }
-      val prevDv = curBase.map(bb => readDeletionVector(table.resolve(s"v$bb")))
-        .getOrElse(Map.empty)
-      val carriedDv = prevDv.filter { case (f, _) =>
-        dvBucketOf(f).exists(b => !touchedHere.contains(b) && manifest.contains(b)) }
-      val mergedDv = (carriedDv.keySet ++ deletionVector.keySet).map { f =>
-        f -> (carriedDv.getOrElse(f, Seq.empty) ++ deletionVector.getOrElse(f, Seq.empty))
-          .distinct.sorted
-      }.toMap.filter(_._2.nonEmpty)
-      if (mergedDv.nonEmpty)
-        Files.write(staging.resolve(DvFile), deletionVectorJson(mergedDv).getBytes("UTF-8"))
-      else Files.deleteIfExists(staging.resolve(DvFile))
       Files.write(staging.resolve(PartsManifest),
         JsonMethods.compact(JsonMethods.render(JObject(
           manifest.toSeq.sortBy(_._1).map { case (k, ver) => k -> JLong(ver) }.toList
         ))).getBytes("UTF-8"))
       // Delta interop: rewritten partitions as relative adds, untouched ones
-      // carried as absolute-URI adds (shallow-clone shape) from the previous
+      // carried as absolute-URI adds (shallow-clone shape) from the base
       // version's log — still metadata-only, still never listing their bytes.
       // fileStats=false (streaming micro-batch sinks) skips the footer pass —
       // same contract as commitVersion's flag.
-      // Deletion vectors ride the log too (VERDICT r11 "What's missing
-      // #1"): every carried add's `deletionVector` descriptor is set from
-      // THIS commit's merged sidecar state — attached where tombstones
-      // exist, cleared where they shed — so an external engine replaying
-      // the log alone sees post-delete rows with zero data rewrites.
-      // Matching is by the encoding-safe last-3-components form (carried
-      // paths are absolute URIs; mergedDv keys are `v<N>/<part>/<file>`).
-      // Own (rewritten) adds never carry a DV — the staged rewrite
-      // materializes deletions, and the commit validation above rejects a
-      // DV targeting a rewritten bucket.
       val carried0 = Prof.time("commitPartitions.carriedAdds")(
-        DeltaInterop.carriedAdds(next.sparkSession, table, curBase, manifest,
-          rewritten = written.toSet, partCol))
+        curBase.fold(Seq.empty[DeltaInterop.Add])(b =>
+          DeltaInterop.carriedAdds(table.resolve(s"v$b"), baseLog(b), manifest,
+            rewritten = written.toSet, partCol)))
+      // Deletion vectors live on the carried adds: each keeps its base
+      // descriptor (its tombstones survive exactly while its bytes do), and
+      // this commit's new tombstones merge into the matching add — keyed by
+      // the encoding-safe `v<owner>/<part>/<file>` form. Own (rewritten)
+      // adds never carry one: the staged rewrite materializes deletions,
+      // and the validation above rejects a vector aimed at a rewritten
+      // bucket. A new entry that names no carried file would tombstone
+      // nothing and silently resurrect its rows, so it fails loudly.
       val carried =
-        if (mergedDv.isEmpty && carried0.forall(_.dv.isEmpty)) carried0
-        else carried0.map { a =>
-          val key = a.path.split('/').takeRight(3).mkString("/")
-          val dv = mergedDv.get(key).map(DeltaDv.inline)
-          // protocol: a DV'd file's per-file stats stop being tight
-          // (numRecords stays PHYSICAL — row-index space — but min/max
-          // may describe deleted rows); a file whose vector sheds was
-          // rewritten, so its fresh tight stats arrive as an own add
-          a.copy(dv = dv,
-            stats = if (dv.isEmpty) a.stats
-              else a.stats.map(DeltaInterop.markStatsUntight))
+        if (deletionVector.isEmpty) carried0
+        else {
+          val keyed = carried0.map(a => DeltaInterop.dvKey(table, a.path) -> a)
+          val unknown = deletionVector.keySet -- keyed.map(_._1)
+          require(unknown.isEmpty,
+            s"deletionVector targets ${unknown.toSeq.sorted.take(3).mkString(", ")} " +
+              "which no carried add names — stale coordinates, relocate against " +
+              "the current version")
+          keyed.map { case (key, a) =>
+            deletionVector.get(key).filter(_.nonEmpty).fold(a) { rows =>
+              val merged = (a.dv.fold(Seq.empty[Long])(DeltaDv.rows) ++ rows).distinct.sorted
+              // protocol: a DV'd file's per-file stats stop being tight
+              // (numRecords stays PHYSICAL — row-index space — but min/max
+              // may describe deleted rows)
+              a.copy(dv = Some(DeltaDv.inline(merged)),
+                stats = a.stats.map(DeltaInterop.markStatsUntight))
+            }
+          }
         }
       // typeWidening is sticky in the per-version log too: carried buckets
       // keep narrow physical files long after the widening commit, so every
       // later version's standalone log must still declare the feature
       val widenFeature =
-        if (curWidened || curBase.exists(b => DeltaInterop.logFeatures(
-            DeltaInterop.logFile(table.resolve(s"v$b"))).contains("typeWidening")))
+        if (curWidened || curBase.exists(b => baseLog(b).features.contains("typeWidening")))
           Set("typeWidening")
         else Set.empty[String]
       val adds = Prof.time("commitPartitions.writeCommit0")(
@@ -1434,14 +1281,14 @@ object Storage {
           // ...and the converse (ADVICE r11): a DV-ONLY winner moves no
           // manifest entry, so the parts diff alone is blind to it. A
           // loser re-finalizing staged bytes read BEFORE those tombstones
-          // existed — while carriedDv sheds the winner's DV for its
-          // written buckets — would silently resurrect the deleted rows.
+          // existed — while its rewritten buckets' fresh adds drop the
+          // winner's descriptors — would silently resurrect the deleted rows.
           // Union the buckets whose DV state changed between the two
           // bases into the conflict set; the rebase read path reads the
           // winner's version DV-applied, materializing the deletes.
-          val dvOld = curBase.map(b => readDeletionVector(table.resolve(s"v$b")))
-            .getOrElse(Map.empty[String, Seq[Long]])
-          val dvNew = readDeletionVector(table.resolve(s"v$newBase"))
+          def dvAt(b: Long) = dvDescriptors(table.resolve(s"v$b"), baseLog(b).adds)
+          val dvOld = curBase.fold(Map.empty[String, DeltaDv.Descriptor])(dvAt)
+          val dvNew = dvAt(newBase)
           val dvChanged = (dvOld.keySet ++ dvNew.keySet)
             .filter(f => dvOld.get(f) != dvNew.get(f))
             .flatMap(dvBucketOf)
@@ -1464,8 +1311,8 @@ object Storage {
           // NOT a conflict: dvChanged ∩ dvBuckets — two concurrent
           // takedowns tombstoning the same bucket. The DV-only winner
           // moved no file, so the loser's coordinates still name live
-          // bytes, and the retry's re-staging re-reads carriedDv from the
-          // winner's version and UNIONS both vectors — the serial
+          // bytes, and the retry's re-staging carries the winner's
+          // descriptors and UNIONS both vectors — the serial
           // outcome, no rebase needed (spec: concurrent takedowns).
           val overlap = touched.intersect(written.toSet ++ effDrop ++ dvBuckets) ++
             dvChanged.intersect(written.toSet ++ effDrop)
@@ -1574,17 +1421,14 @@ object Storage {
     require(Files.exists(tdir.resolve(PartsManifest)),
       s"restore target v$toV is not retained (or not partition-manifested) at $table")
     val manifest = readPartsManifest(tdir)
-    val dv = readDeletionVector(tdir)
-    val log = DeltaInterop.logFile(tdir)
-    require(Files.exists(log), s"v$toV has no Delta log to type the restore")
-    val snap = DeltaInterop.readLog(log)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val snap = DeltaInterop.readLog(DeltaInterop.logFile(tdir))
+    val schema = snap.schema
     val partCols = snap.partitionColumns
     val partCol = partCols.headOption.getOrElse("pbucket")
-    // a restore resurrects toV's declared schema and physical files, so it
-    // must carry toV's protocol features (typeWidening, deletionVectors)
-    val features = DeltaInterop.logFeatures(log)
+    // a restore resurrects toV's declared schema, physical files and their
+    // deletion vectors, so it must carry toV's protocol features
+    // (typeWidening, deletionVectors)
+    val features = snap.features
     val keep = effectiveKeep(table, keepVersions)
     val tableAbs = table.toAbsolutePath
     var attempts = 0
@@ -1600,12 +1444,11 @@ object Storage {
           JsonMethods.compact(JsonMethods.render(JObject(
             manifest.toSeq.sortBy(_._1).map { case (k, ver) => k -> JLong(ver) }.toList
           ))).getBytes("UTF-8"))
-        if (dv.nonEmpty)
-          Files.write(staging.resolve(DvFile), deletionVectorJson(dv).getBytes("UTF-8"))
         val g = tdir.resolve(GeometryFile)
         if (Files.exists(g)) Files.copy(g, staging.resolve(GeometryFile))
-        // every file is a carried add from toV's own log — pure metadata
-        val carried = DeltaInterop.carriedAdds(spark, table, Some(toV), manifest,
+        // every file is a carried add from toV's own log, descriptors
+        // included — pure metadata
+        val carried = DeltaInterop.carriedAdds(tdir, snap, manifest,
           rewritten = Set.empty, partCol)
         val adds = DeltaInterop.writeCommit0(spark, staging, schema, partCols,
           carried = carried, footerStats = NoFileStats, extraFeatures = features)
@@ -1664,7 +1507,7 @@ object Storage {
 
   /** [[readPartitionedVersion]] with two extra columns exposing physical
     * row identity: `__dv_file` (table-relative `v<ver>/<part>/<file>` —
-    * the deletion-vector sidecar's own path form) and `__dv_pos` (parquet
+    * the deletion-vector key form, [[DeltaInterop.dvKey]]) and `__dv_pos` (parquet
     * row index within that file) — the coordinates a deletion-vector
     * commit tombstones. Vectors already committed are applied FIRST, so
     * every coordinate returned names a live row. */
@@ -1718,15 +1561,28 @@ object Storage {
     * Both sides always run to completion before this returns or throws, so
     * a failure never leaves the sibling still committing behind the
     * caller's back. A failure propagates to the caller; when both sides
-    * fail, `a`'s failure is thrown with `b`'s attached as suppressed. */
+    * fail, `a`'s failure is thrown with `b`'s attached as suppressed.
+    * Both sides run under the caller's Spark job group and description, so
+    * their jobs are attributed to the caller's phase; each pool thread gets
+    * its own values back afterwards. */
   private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, ExecutionContext, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.util.{Failure, Try}
     implicit val ec: ExecutionContext = ExecutionContext.global
+    // pool threads keep whatever local properties they inherited when they
+    // were created, so the caller's job attribution is carried explicitly
+    val keys = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    val caller = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map { s => val c = s.sparkContext; (c, keys.map(k => k -> c.getLocalProperty(k))) }
+    def asCaller[T](body: => T): T = caller.fold(body) { case (c, props) =>
+      val own = keys.map(k => k -> c.getLocalProperty(k))
+      props.foreach { case (k, v) => c.setLocalProperty(k, v) }
+      try body finally own.foreach { case (k, v) => c.setLocalProperty(k, v) }
+    }
     // blocking: each side holds its pool thread for whole Spark jobs
-    val fa = Future(blocking(a))
-    val fb = Future(blocking(b))
+    val fa = Future(blocking(asCaller(a)))
+    val fb = Future(blocking(asCaller(b)))
     val ra = Try(Await.result(fa, Duration.Inf))
     val rb = Try(Await.result(fb, Duration.Inf))
     (ra, rb) match {
@@ -1781,21 +1637,14 @@ object Storage {
       spark: SparkSession, table: Path, v: Long,
       onlyParts: Option[Set[String]], lineage: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, substring_index, col => c, lit => l}
-    val cur = currentVersion(table)
-    require(Files.exists(table.resolve(s"v$v")) && cur.exists(v <= _),
-      s"version $v not retained at $table (current=$cur)")
     val vdir = table.resolve(s"v$v")
     require(Files.exists(vdir.resolve(PartsManifest)),
       s"$table v$v has no partition manifest — " +
         "was it committed with commitVersion instead of commitPartitions?")
     val manifest = readPartsManifest(vdir)
     // a PRESENT-but-empty manifest is the valid empty-bootstrap state
-    // (commitPartitions of an empty batch) — resolve the schema from the
-    // commit's Delta log instead of wedging the table; without it (no
-    // pre-interop table can be empty-manifested) fail loudly
+    // (commitPartitions of an empty batch) — the commit's Delta log types it
     if (manifest.isEmpty) {
-      require(Files.exists(DeltaInterop.logFile(vdir)),
-        s"$table v$v: empty partition manifest and no Delta log to type it")
       val df = DeltaInterop.readSnapshot(spark, vdir)
       return if (!lineage) df
         else df.withColumn("__dv_file", l(null).cast("string"))
@@ -1805,23 +1654,24 @@ object Storage {
     if (selected.isEmpty)
       readPartitionedAt0(spark, table, v, None, lineage).limit(0)
     else {
-      // the deletion vector rides WITH the version: tombstoned (file,
-      // row-index) coordinates are subtracted from every read — upserts,
-      // CDF snapshots, time travel — so a merge-on-read delete is visible
+      // ONE parse of the version's log yields both the declared schema and
+      // the deletion vectors (only DV-carrying adds are parsed). The
+      // vectors ride WITH the version: tombstoned (file, row-index)
+      // coordinates are subtracted from every read — upserts, CDF
+      // snapshots, time travel — so a merge-on-read delete is visible
       // table-wide without rewriting a byte of data. Restricted to the
       // selected buckets so the broadcast stays O(pruned tombstones).
-      val dv = readDeletionVector(vdir).filter { case (f, _) =>
-        dvBucketOf(f).exists(selected.contains) }
+      val log = DeltaInterop.readLog(DeltaInterop.logFile(vdir), dvAddsOnly = true)
+      val dv = dvDescriptors(vdir, log.adds).collect {
+        case (f, d) if dvBucketOf(f).exists(selected.contains) => f -> DeltaDv.rows(d) }
       val needMeta = lineage || dv.nonEmpty
-      // align to the commit's DECLARED schema (the Delta log's) =
-      // add-column evolution: buckets carried from before the column
-      // existed read null for it — including a PRUNED read whose selected
-      // buckets ALL predate the column (lit(null) fills a column no
-      // branch carries) — exactly as readSnapshot and any external Delta
-      // engine resolve the same mixed adds. A log-less version dir (no
-      // such table exists post-interop) keeps the strict union, which
-      // fails loudly on a schema mismatch instead of fabricating nulls.
-      val declared = DeltaInterop.declaredSchema(vdir)
+      // align to the commit's DECLARED schema = add-column evolution:
+      // buckets carried from before the column existed read null for it —
+      // including a PRUNED read whose selected buckets ALL predate the
+      // column (lit(null) fills a column no branch carries) — exactly as
+      // readSnapshot and any external Delta engine resolve the same mixed
+      // adds.
+      val declared = log.schema
       val composed = selected.groupBy(_._2).toSeq.sortBy(_._1).map { case (ver, parts) =>
         val ownerDir = table.resolve(s"v$ver")
         val base = spark.read.option("basePath", ownerDir.toString)
@@ -1831,16 +1681,14 @@ object Storage {
         // file:/… URIs whose root prefix is percent-ENCODED for special
         // characters, while driver-side paths are raw — matching absolute
         // strings would silently miss tombstones for a table path
-        // containing a space (ADVICE r11). Every DV path is
-        // `v<ver>/<part>/<file>` by construction, and those three
-        // components are encoding-free (version dirs, int-valued bucket
-        // dirs per the pkBucket contract, Spark part filenames), so the
-        // last three path components ARE the sidecar's relative form —
-        // both join sides derive from it and no decode is needed.
+        // containing a space (ADVICE r11). The last three path components
+        // are encoding-free and ARE the descriptors' key form
+        // ([[DeltaInterop.dvKey]]) — both join sides derive from it and
+        // no decode is needed.
         else base.select(c("*"),
           substring_index(c("_metadata.file_path"), "/", -3).as("__dv_file"),
           c("_metadata.row_index").as("__dv_pos"))
-      }.reduce(_.unionByName(_, allowMissingColumns = declared.isDefined))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
       val masked =
         if (dv.isEmpty) composed
         else {
@@ -1850,16 +1698,11 @@ object Storage {
             Seq("__dv_file", "__dv_pos"), "left_anti")
         }
       val lineageCols = if (lineage) Seq(c("__dv_file"), c("__dv_pos")) else Seq.empty
-      declared match {
-        case None =>
-          if (needMeta && !lineage) masked.drop("__dv_file", "__dv_pos") else masked
-        case Some(schema) =>
-          val present = masked.columns.toSet
-          masked.select(schema.map { f =>
-            if (present.contains(f.name)) c(f.name).cast(f.dataType).as(f.name)
-            else l(null).cast(f.dataType).as(f.name)
-          } ++ lineageCols: _*)
-      }
+      val present = masked.columns.toSet
+      masked.select(declared.map { f =>
+        if (present.contains(f.name)) c(f.name).cast(f.dataType).as(f.name)
+        else l(null).cast(f.dataType).as(f.name)
+      } ++ lineageCols: _*)
     }
   }
 
@@ -1956,31 +1799,33 @@ object Storage {
     * `toV` because their deletion vectors differ — invisible to
     * [[partitionsChangedBetween]] (a DV-only commit carries every byte by
     * reference, so no manifest entry moves). Any version diff (the change
-    * feed above all) must union both. Metadata-only: two sidecar reads. */
+    * feed above all) must union both. Metadata-only: two log reads (each
+    * parsing only its DV-carrying adds). */
   def dvChangedBuckets(table: Path, fromV: Long, toV: Long): Set[String] = {
     require(fromV <= toV, s"fromV $fromV must be <= toV $toV")
     // same resolution as the manifest diff: visible-state-identical
     // commits contribute nothing (a compaction APPLIES outstanding DVs —
-    // its cleared sidecar differs from the predecessor's, but the visible
-    // rows do not)
+    // its descriptor-free adds differ from the predecessor's, but the
+    // visible rows do not)
     val resolved = resolveStateIdentical(table, fromV, toV)
     if (resolved == fromV) return Set.empty
-    def sidecarDiff(x: Long, y: Long): Set[String] = {
-      val a = readDeletionVector(table.resolve(s"v$x"))
-      val b = readDeletionVector(table.resolve(s"v$y"))
+    val dvs = scala.collection.mutable.Map.empty[Long, Map[String, DeltaDv.Descriptor]]
+    def dvDiff(x: Long, y: Long): Set[String] = {
+      val Seq(a, b) = Seq(x, y).map(w =>
+        dvs.getOrElseUpdate(w, dvDescriptorsAt(table.resolve(s"v$w"))))
       (a.keySet ++ b.keySet).filter(f => a.get(f) != b.get(f)).flatMap(dvBucketOf)
     }
     // per-step composition across an interval that CROSSES a compaction,
     // mirroring [[partitionsChangedBetween]]: a compaction clears the
-    // sidecar (it applied the DVs), so an endpoint diff against a
-    // pre-compaction sidecar reports every DV'd bucket changed even
+    // descriptors (it applied the DVs), so an endpoint diff against a
+    // pre-compaction version reports every DV'd bucket changed even
     // though the marker proves the visible rows did not move
     val markers = markerStepsIn(table, fromV, resolved)
     if (markers.nonEmpty && allManifested(table, fromV, resolved))
       (fromV + 1 to resolved).filterNot(markers.contains).foldLeft(Set.empty[String]) {
-        (acc, v) => acc ++ sidecarDiff(v - 1, v)
+        (acc, v) => acc ++ dvDiff(v - 1, v)
       }
-    else sidecarDiff(fromV, resolved)
+    else dvDiff(fromV, resolved)
   }
 
   /** TTL retention for a partition-manifested table: DROP every committed
@@ -2003,8 +1848,7 @@ object Storage {
     // the empty carrier frame is typed from the DECLARED schema, not a
     // parquet read — even a schema probe would open the doomed buckets'
     // footers, and "never opens the expired bytes" is the contract
-    val declared = DeltaInterop.declaredSchema(table.resolve(s"v$cur")).getOrElse(
-      throw new IllegalStateException(s"$table v$cur has no Delta log to type the expiry"))
+    val declared = DeltaInterop.readLog(DeltaInterop.logFile(table.resolve(s"v$cur"))).schema
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], declared)
     commitPartitions(empty, table, partCol,
@@ -2019,7 +1863,7 @@ object Storage {
     * micro-batch; the policy bounds that drift so a scheduled caller can
     * invoke this after every load and pay the rewrite only when it earns
     * its keep. Returns the compacted file-count target, or None when the
-    * table is healthy (or has no committed log to judge from).
+    * table is healthy or has no committed version.
     *
     * CONVERGENCE: a partition-manifested table can never compact below
     * one file per committed partition (the layout is the point), so on a
@@ -2032,9 +1876,7 @@ object Storage {
   def maybeCompact(spark: SparkSession, table: Path,
       targetBytes: Long = 128L << 20, maxSmallFiles: Int = 16): Option[Int] = {
     val v = currentVersion(table).getOrElse(return None)
-    val log = DeltaInterop.logFile(table.resolve(s"v$v"))
-    if (!Files.exists(log)) return None
-    val adds = DeltaInterop.readLog(log).adds
+    val adds = DeltaInterop.readLog(DeltaInterop.logFile(table.resolve(s"v$v"))).adds
     val small = adds.count(_.size < targetBytes / 2)
     val vdir = table.resolve(s"v$v")
     val floor =
@@ -2061,8 +1903,10 @@ object Storage {
     }
   }
 
-  /** Small-file compaction: rewrite `table` into ⌈bytes/targetBytes⌉
-    * files via a narrow coalesce (no shuffle) + [[atomicReplace]].
+  /** Small-file compaction: rewrite the committed state of `table` into
+    * ⌈bytes/targetBytes⌉ files as a new version (a narrow coalesce for a
+    * plain table; one file per bucket split for a partition-manifested
+    * one). A table with no committed version fails loudly.
     * Incremental loads accrete one file per micro-batch/run; thousands of
     * tiny files turn a 100 TB scan into a metadata storm (one task + one
     * open per file), so compaction is scheduled maintenance, not an
@@ -2110,8 +1954,7 @@ object Storage {
         target
       // versioned table: compaction is just another commit of the latest
       // snapshot, rewritten into fewer files — never touch the layout
-      // (walking the directory would read EVERY retained version and an
-      // atomicReplace would destroy the v*/_LATEST structure)
+      // (walking the table directory would read EVERY retained version)
       case Some(v) =>
         val dir = table.resolve(s"v$v")
         // a metadata-only version (shallow clone) has no local bytes to
@@ -2123,10 +1966,7 @@ object Storage {
         commitVersion(readVersionDir(spark, dir).coalesce(n), table)
         n
       case None =>
-        recover(table)
-        val n = fileCountFor(table, targetBytes)
-        atomicReplace(spark.read.parquet(table.toString).coalesce(n), table)
-        n
+        throw new IllegalStateException(s"no committed version to compact at $table")
     }
 
   /** Re-hash a `pbucket`-manifested table to `newN` buckets in ONE commit —

@@ -849,12 +849,12 @@ object CoreQueries {
              |FROM events GROUP BY event_type""".stripMargin)),
 
     // Merge-on-read deletes THROUGH the external-reader path (round 12):
-    // a deleteWithVectors takedown commits an O(k) sidecar + the Delta
-    // protocol's `add.deletionVector` descriptors (inline Z85 Roaring
-    // bitmaps, graft.ops.DeltaDv) with ZERO data rewrites, and the row
-    // reads the final state back the way an external Delta engine would —
+    // a deleteWithVectors takedown commits the Delta protocol's
+    // `add.deletionVector` descriptors (inline Z85 Roaring bitmaps,
+    // graft.ops.DeltaDv) with ZERO data rewrites, and the row reads the
+    // final state back the way an external Delta engine would —
     // replaying the TABLE-LEVEL `_delta_log` alone (checkpoint + trailing
-    // commits; no graft manifest, no `_DV.json`) and subtracting the
+    // commits; no graft manifest, no per-version log) and subtracting the
     // descriptors. The oracle recomputes the post-delete state
     // relationally, so the hash match proves descriptor emission,
     // protocol-feature gating, and log-only DV application end-to-end at
@@ -3385,9 +3385,9 @@ object CoreQueries {
       },
       Some(s"SELECT * FROM ($UpsertStateOracle\n) z WHERE z.user_id % 7 <> 0")),
 
-    // M10's takedown, MERGE-ON-READ: the same doomed keys committed as an
-    // O(k) deletion-vector sidecar — zero data files rewritten
-    // (DeletionVectorSpec asserts the version dir holds no partition
+    // M10's takedown, MERGE-ON-READ: the same doomed keys committed as
+    // O(k) deletion-vector descriptors in the Delta log — zero data files
+    // rewritten (DeletionVectorSpec asserts the version dir holds no partition
     // dirs) — and read back THROUGH the tombstone-subtracting path. The
     // oracle is m10's, verbatim: a reader cannot tell tombstoned from
     // rewritten, which is the whole contract. Compaction (materializing

@@ -637,7 +637,7 @@ object StreamingLoads {
 
     // versioned commit log, not directory swap: a batch job reading the
     // dimension DURING a streaming merge keeps its resolved snapshot
-    // (Storage.commitVersion scale notes) — atomicReplace's swap window
+    // (Storage.commitVersion scale notes) — a directory swap's window
     // would 404 it. keepVersions below sizes the retention to how many
     // MICRO-BATCHES may commit while a concurrent batch scan is still
     // running — at default 1 a long scan would be vacuumed out after two
@@ -665,8 +665,8 @@ object StreamingLoads {
   }
 
   /** Parquet-backed target table for the streaming upsert: each micro-batch
-    * computes the merged next state and swaps it in atomically
-    * ([[graft.ops.Storage.atomicReplace]]) — fully distributed, nothing
+    * computes the merged next state and commits it as a new version
+    * ([[graft.ops.Storage.commitVersion]]) — fully distributed, nothing
     * collects to the driver. Production form: a Delta table + MERGE. */
   final class StreamingTableState(
       spark: SparkSession,

@@ -2,13 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import graft.ops.{Cdc, MergeOps, Storage}
+import graft.ops.{Cdc, DeltaInterop, MergeOps, Storage}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Merge-on-read deletes ([[MergeOps.deleteWithVectors]]): a k-row takedown
-  * commits an O(k) `_DV.json` sidecar instead of rewriting every hit
-  * bucket. The contracts proven here:
+  * commits O(k) `add.deletionVector` descriptors in the version's Delta log
+  * instead of rewriting every hit bucket. The contracts proven here:
   *   - the DV commit rewrites ZERO data files (its version dir holds no
   *     partition dirs — metadata only);
   *   - every read path subtracts the tombstones (current read, time
@@ -59,7 +59,10 @@ class DeletionVectorSpec extends SparkTestBase {
     // the commit is metadata-only: no partition dir was written
     assert(partDirs(table.resolve(s"v$vd")).isEmpty,
       "a DV commit must rewrite zero data files")
-    assert(Files.exists(table.resolve(s"v$vd").resolve("_DV.json")))
+    // the tombstones live on the hit files' adds in the version's log
+    val dvAdds = DeltaInterop.readLog(DeltaInterop.logFile(table.resolve(s"v$vd")))
+      .adds.filter(_.dv.nonEmpty)
+    assert(dvAdds.nonEmpty && dvAdds.map(_.dv.get.cardinality).sum == doomedKeys.size)
 
     // current read subtracts the tombstones; time travel does not
     assert(stateKeys(table) == all -- doomedKeys)
@@ -152,7 +155,7 @@ class DeletionVectorSpec extends SparkTestBase {
     // a DV-only winner moves no data file, so a racing DV-only loser's
     // coordinates still name live bytes: the conflict set must NOT treat
     // dv-vs-dv on the same bucket as an overlap — the loser's CAS retry
-    // re-reads the winner's vector via carriedDv and unions both, the
+    // carries the winner's descriptors and unions both, the
     // serial outcome (round 12; the converse directions — a rewrite
     // racing a DV and a DV racing a rewrite — abort or rebase, see
     // PartitionedStorageSpec).

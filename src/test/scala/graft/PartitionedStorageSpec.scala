@@ -7,49 +7,6 @@ import org.apache.spark.sql.functions._
 
 class PartitionedStorageSpec extends SparkTestBase {
 
-  test("partitioned layout: filters become partition pruning; dynamic overwrite is incremental") {
-    val dir = Files.createTempDirectory("part_storage").resolve("orders")
-    val orders = Tables.orders(spark, Sf001)
-      .withColumn("order_year", year(col("o_orderdate")))
-    Storage.writePartitioned(orders, dir, Seq("order_year"))
-
-    // filter on the partition column → PartitionFilters in the scan, and
-    // only the matching directory is read
-    val q = spark.read.parquet(dir.toString).filter(col("order_year") === 1997)
-    q.collect()
-    val scan = q.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [isnotnull(order_year"), scan)
-    assert(q.count() ==
-      orders.filter(col("order_year") === 1997).count())
-
-    // dynamic overwrite: rewriting ONE year leaves the others untouched
-    val patched = orders.filter(col("order_year") === 1997)
-      .withColumn("o_orderpriority", lit("0-PATCHED"))
-    Storage.writePartitioned(patched, dir, Seq("order_year"))
-    val after = spark.read.parquet(dir.toString)
-    assert(after.count() == orders.count(), "other partitions must survive")
-    assert(after.filter(col("order_year") === 1997)
-      .filter(col("o_orderpriority") =!= "0-PATCHED").count() == 0)
-    assert(after.filter(col("order_year") =!= 1997)
-      .filter(col("o_orderpriority") === "0-PATCHED").count() == 0)
-  }
-
-  test("atomicReplace recovers a swap interrupted between its two moves") {
-    import java.nio.file.{Files => F, StandardCopyOption}
-    val work = Files.createTempDirectory("swap_recovery")
-    val table = work.resolve("t")
-    val v1 = Tables.nation(spark, Sf001)
-    Storage.atomicReplace(v1, table)
-    // simulate a crash in the swap window: table moved aside, new never landed
-    F.move(table, work.resolve("t.old"), StandardCopyOption.ATOMIC_MOVE)
-    assert(!F.exists(table) && F.exists(work.resolve("t.old")))
-    // read() rolls back to the old state instead of path-not-found
-    assert(Storage.read(spark, table).count() == v1.count())
-    // and a subsequent replace proceeds normally
-    Storage.atomicReplace(v1.limit(3), table)
-    assert(Storage.read(spark, table).count() == 3)
-  }
-
   test("commit log: reader during a commit keeps a valid snapshot; no missing-path window") {
     import java.nio.file.{Files => F}
     val table = Files.createTempDirectory("commit_log").resolve("t")
@@ -67,7 +24,7 @@ class PartitionedStorageSpec extends SparkTestBase {
     assert(v1 == 1)
     // ...and still reads the OLD complete snapshot afterwards (v0 is inside
     // the keep-window), while a fresh reader sees the new version. This is
-    // exactly the isolation atomicReplace cannot give.
+    // exactly the isolation a directory swap cannot give.
     assert(pinned.count() == nation.count())
     assert(Storage.readVersion(spark, table).count() == 5)
 
@@ -197,34 +154,6 @@ class PartitionedStorageSpec extends SparkTestBase {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
-  test("stats manifest: a selective range predicate reads strictly fewer files") {
-    import spark.implicits._
-    val table = Files.createTempDirectory("stats_prune").resolve("t")
-    // range-clustered write (the z-order/sort-on-key shape): 8 files, each
-    // covering a disjoint id range
-    val df = spark.range(0, 8000).select($"id", ($"id" % 13).as("v"))
-      .repartitionByRange(8, $"id")
-    Storage.commitVersion(df, table)
-
-    val (kept, total) = Storage.statsPrunedFiles(table, "id", 100.0, 200.0)
-    assert(total == 8, s"expected 8 files, got $total")
-    assert(kept.size < total, s"pruning must skip files: kept ${kept.size}/$total")
-    assert(kept.size <= 2, s"a 100-wide range should hit at most 2 of 8 range-files")
-    info(s"stats manifest kept ${kept.size} of $total files for id in [100, 200]")
-
-    // pruned read + filter ≡ full read + filter
-    val want = Storage.readVersion(spark, table)
-      .filter($"id".between(100, 200)).collect().map(_.getLong(0)).sorted.toSeq
-    val got = Storage.readVersionPruned(spark, table, "id", 100.0, 200.0)
-      .filter($"id".between(100, 200)).collect().map(_.getLong(0)).sorted.toSeq
-    assert(got == want)
-
-    // a disjoint range prunes everything and still answers correctly
-    val none = Storage.readVersionPruned(spark, table, "id", 1e7, 2e7)
-      .filter($"id".between(1e7.toLong, 2e7.toLong))
-    assert(none.count() == 0)
-  }
-
   test("commit log: schema evolves across versions; time travel returns each version's own schema") {
     import spark.implicits._
     val table = Files.createTempDirectory("schema_evo").resolve("t")
@@ -238,7 +167,7 @@ class PartitionedStorageSpec extends SparkTestBase {
   test("readVersionOr refuses a flat (non-versioned) table instead of silently rebuilding") {
     val table = Files.createTempDirectory("flat_guard").resolve("t")
     val nation = Tables.nation(spark, Sf001)
-    Storage.atomicReplace(nation, table) // legacy flat layout
+    nation.write.parquet(table.toString) // plain parquet from another tool
     intercept[IllegalArgumentException] {
       Storage.readVersionOr(spark, table, nation.limit(0))
     }
@@ -387,15 +316,17 @@ class PartitionedStorageSpec extends SparkTestBase {
     import java.nio.file.{Files => F}
     val table = Files.createTempDirectory("compaction").resolve("t")
     val orders = Tables.orders(spark, Sf001)
-    Storage.atomicReplace(orders.repartition(16), table)
-    def parquetFiles() = {
-      val s = F.list(table)
+    // no committed version: nothing to compact, and it says so
+    intercept[IllegalStateException](Storage.compact(spark, table))
+    Storage.commitVersion(orders.repartition(16), table)
+    def parquetFiles(v: Long) = {
+      val s = F.list(table.resolve(s"v$v"))
       try s.toArray.map(_.toString).count(_.endsWith(".parquet")) finally s.close()
     }
-    assert(parquetFiles() == 16)
+    assert(parquetFiles(0) == 16)
     val n = Storage.compact(spark, table, targetBytes = 1L << 30)
-    assert(n == 1 && parquetFiles() == 1, "tiny table must compact to one file")
-    assert(Storage.read(spark, table).count() == orders.count())
+    assert(n == 1 && parquetFiles(1) == 1, "tiny table must compact to one file")
+    assert(Storage.readVersion(spark, table).count() == orders.count())
   }
 
   test("rebucket: state identity, EMPTY change feed, pruning works at the new geometry") {
@@ -906,10 +837,10 @@ class PartitionedStorageSpec extends SparkTestBase {
     assert(snap.schema("k").dataType == LongType)
     assert(snap.select("k", "x").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap == rows)
-    val feats = graft.ops.DeltaInterop.logFeatures(
+    val v1Log = graft.ops.DeltaInterop.readLog(
       graft.ops.DeltaInterop.logFile(table.resolve("v1")))
-    assert(feats.contains("typeWidening"), feats.toString)
-    val declared = graft.ops.DeltaInterop.declaredSchema(table.resolve("v1")).get
+    assert(v1Log.features.contains("typeWidening"), v1Log.features.toString)
+    val declared = v1Log.schema
     assert(declared("k").metadata.contains("delta.typeChanges"),
       declared("k").metadata.json)
 
@@ -919,8 +850,8 @@ class PartitionedStorageSpec extends SparkTestBase {
       Seq((3L, 9.5d, 1)).toDF("k", "x", "pbucket").unionByName(
         Seq((2L, 2.5d, 1)).toDF("k", "x", "pbucket")),
       table, "pbucket", keepVersions = 4)
-    assert(graft.ops.DeltaInterop.logFeatures(
-      graft.ops.DeltaInterop.logFile(table.resolve("v2"))).contains("typeWidening"))
+    assert(graft.ops.DeltaInterop.readLog(
+      graft.ops.DeltaInterop.logFile(table.resolve("v2"))).features.contains("typeWidening"))
 
     // narrowing is refused loudly
     val e = intercept[IllegalArgumentException] {
